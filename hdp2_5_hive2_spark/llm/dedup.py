@@ -874,12 +874,16 @@ def setsim_join_pairs(
     scales past broadcast). Verification joins the candidate pairs back
     to per-doc sorted token arrays and intersects JVM-side
     (array_intersect); arrays are doc-sized, never group-sized, and are
-    built for CANDIDATE documents only — a broadcast semi-join prunes
-    toks before the collect_list shuffle (guide §3.2: at scale
-    candidates are a sliver of the corpus, so the verify-side agg
-    shuffles that sliver, not every document). Three corpus-sized
-    shuffles total: df count, prefix self-join, and the pruned verify
-    build."""
+    built for CANDIDATE documents only — a semi-join on the candidate
+    ids prunes toks before the collect_list agg (prune the big side
+    before its shuffle: at scale candidates are a sliver of the corpus,
+    so the verify-side agg builds arrays for that sliver, not every
+    document). Nothing pins the semi-join's strategy: the static plan is
+    a sort-merge semi-join, which AQE may turn into a broadcast at
+    runtime when the probe side is small. Either way toks crosses one
+    exchange on ``_id`` (the sort-merge join's, which the agg reuses, or
+    the agg's own). Three corpus-sized shuffles total: df count, prefix
+    self-join, and the pruned verify build."""
     if not (0 < tau_num <= tau_den):
         raise ValueError("tau must be in (0, 1]")
     # toks feeds the df-count agg, the ranked join AND the verify sets —
@@ -935,9 +939,11 @@ def setsim_join_pairs(
     # Build verify token arrays for CANDIDATE docs only (guide §3.2: prune
     # the big side before its shuffle): non-candidate ids can never match
     # the verify equi-joins, so the collect_list agg — previously one
-    # sorted array per CORPUS document — shuffles only touched docs. The
-    # probe ids broadcast (candidate pairs are small by construction), so
-    # the prune costs no extra exchange on toks.
+    # sorted array per CORPUS document — builds arrays for touched docs
+    # only. The prune costs no extra exchange on toks: a sort-merge semi-join
+    # partitions toks on _id, which the agg reuses; a broadcast one (AQE's
+    # runtime choice for a small probe side, not pinned here) leaves that
+    # exchange to the agg.
     touched = cand.select(F.col("da").alias("cid")).union(
         cand.select(F.col("db").alias("cid"))
     )
@@ -1025,7 +1031,8 @@ def exact_substring_spans(
                             "exact_substring_spans: id out of [0, 2^31) "
                             "packing range: "
                         ),
-                        F.col(id_col).cast("string"),
+                        # a NULL id must not turn the message NULL too
+                        F.coalesce(F.col(id_col).cast("string"), F.lit("NULL")),
                     )
                 )
             )

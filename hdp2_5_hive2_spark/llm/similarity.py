@@ -1349,16 +1349,26 @@ def kmeans_lloyd(
     arithmetic: any engine reproduces every cluster bit-for-bit. Empty
     clusters keep their previous centroid.
 
-    Scale shape (the standard 100 TB Lloyd loop): per iteration, ONE
-    Arrow map pass assigns each partition against the broadcast k x d
-    centroid matrix via an int64 GEMM (no shuffle), then ONE groupBy
-    shuffles k rows of d+1 partial sums (map-side combine makes the
-    shuffle payload k x d integers per task, independent of corpus size),
-    and the k new centroids sync through the driver — the unavoidable
-    Lloyd barrier, k*d ints per round."""
+    Scale shape (the standard 100 TB Lloyd loop): per round, ONE Arrow map
+    pass assigns each partition against the broadcast k x d centroid matrix
+    via an int64 GEMM and emits that partition's partial sums — one
+    (cid, cnt, d2s, s) row per non-empty cluster, so a task returns at most
+    k x (d+2) integers whatever the corpus size — and the driver adds them
+    in Python ints. A round is one job with no shuffle; the k new centroids
+    sync through the driver, the unavoidable Lloyd barrier of k*d ints per
+    round. The final assignment pass hands only (id, cid, d2) to the JVM
+    for the per-cluster aggregate.
+
+    Overflow is loud, never a silent wrap: every int64 the kernel forms
+    (distances, per-partition counts and sums) is bounded by n*d*(2M)^2 for
+    n rows seen in the partition and M the largest |coordinate| of those
+    rows and the centroids, and the kernel raises OverflowError once that
+    bound passes int64. The driver raises the same when a cross-partition
+    total leaves int64 (where an ANSI bigint sum would fail)."""
     import numpy as np
     import pandas as pd
 
+    i64_max = int(np.iinfo(np.int64).max)
     q = F.transform(
         F.col(vec_col),
         lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("bigint"),
@@ -1376,82 +1386,100 @@ def kmeans_lloyd(
     cent = np.asarray([r.q for r in seeds], dtype=np.int64)
     dims = cent.shape[1]
 
-    def assign(centroids: np.ndarray) -> DataFrame:
+    def assigner(centroids: np.ndarray):
+        """Batches -> (batch, x, cid, d2) against a frozen centroid copy."""
         cmat = centroids.copy()
         cnorm = (cmat * cmat).sum(axis=1)
+        cmax = int(np.abs(cmat).max())
 
-        def gen(batches):
+        def assigned(batches):
+            n, m = 0, cmax
             for pdf in batches:
                 if not len(pdf):
                     continue
                 x = np.asarray(list(pdf["q"]), dtype=np.int64)
+                n += len(x)
+                m = max(m, int(x.max()), -int(x.min()))
+                if n * dims * (2 * m) ** 2 > i64_max:
+                    raise OverflowError(
+                        f"kmeans_lloyd: int64 overflow: {n} rows x {dims} dims "
+                        f"with |coordinate| up to {m} (after scale={scale}) "
+                        "exceed the exact-integer range"
+                    )
                 d2 = (
                     (x * x).sum(axis=1, keepdims=True)
                     - 2 * (x @ cmat.T)
                     + cnorm[None, :]
                 )
                 cid = d2.argmin(axis=1)  # first minimum = lowest cluster id
+                yield pdf, x, cid, d2[np.arange(len(x)), cid]
+
+        return assigned
+
+    def lloyd_round(centroids: np.ndarray) -> dict[int, list[int]]:
+        """cid -> [cnt, d2 sum, coordinate sums...] over the whole corpus."""
+        assigned = assigner(centroids)
+
+        def partials(batches):
+            acc = np.zeros((k, dims + 2), dtype=np.int64)
+            for _, x, cid, d2 in assigned(batches):
+                np.add.at(acc, cid, np.column_stack([np.ones_like(d2), d2, x]))
+            hit = np.flatnonzero(acc[:, 0])
+            if len(hit):
                 yield pd.DataFrame(
                     {
-                        "id": pdf["id"],
-                        "q": pdf["q"],
-                        "cid": cid.astype("int64"),
-                        "d2": d2[np.arange(len(x)), cid],
+                        "cid": hit,
+                        "cnt": acc[hit, 0],
+                        "d2s": acc[hit, 1],
+                        "s": list(acc[hit, 2:]),
                     }
                 )
 
-        return base.mapInPandas(
-            gen, "id bigint, q array<bigint>, cid bigint, d2 bigint"
-        )
+        totals: dict[int, list[int]] = {}
+        for r in base.mapInPandas(
+            partials, "cid bigint, cnt bigint, d2s bigint, s array<bigint>"
+        ).collect():
+            row, prev = [r.cnt, r.d2s, *r.s], totals.get(r.cid)
+            totals[r.cid] = row if prev is None else [a + b for a, b in zip(prev, row)]
+        if any(abs(v) > i64_max for t in totals.values() for v in t):
+            raise OverflowError("kmeans_lloyd: int64 overflow in a cluster total")
+        return totals
 
-    # inertia_curve rides the EXISTING per-round driver sync: the d2 sum
-    # joins the same groupBy whose collect already happens, so the curve
-    # costs zero extra passes; with the flag off the aggregate list (and
-    # the plan) is byte-identical to the pre-curve version.
+    # inertia_curve rides the per-round driver sync: the d2 sums come back
+    # with the centroid sums, so the curve costs no extra pass, and its last
+    # point is one more round's totals instead of a grouped aggregate.
+    def curve_point(it: int, totals: dict[int, list[int]]) -> tuple[int, int, int]:
+        return it, sum(t[0] for t in totals.values()), sum(t[1] for t in totals.values())
+
     curve: list[tuple[int, int, int]] = []
     for it in range(iters):
-        extra = (
-            [F.sum("d2").alias("d2s")] if inertia_curve else []
-        )
-        sums = (
-            assign(cent)
-            .groupBy("cid")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                *extra,
-                *[
-                    F.sum(F.element_at("q", i + 1)).alias(f"s{i}")
-                    for i in range(dims)
-                ],
-            )
-            .collect()
-        )
+        totals = lloyd_round(cent)
         if inertia_curve:
-            curve.append(
-                (it, sum(r["cnt"] for r in sums), sum(r["d2s"] for r in sums))
-            )
+            curve.append(curve_point(it, totals))
         nxt = cent.copy()
-        for r in sums:
-            nxt[r["cid"]] = [r[f"s{i}"] // r["cnt"] for i in range(dims)]
+        for c, (cnt, _, *sums) in totals.items():
+            nxt[c] = [v // cnt for v in sums]
         cent = nxt
 
-    final = (
-        assign(cent)
+    if inertia_curve:
+        curve.append(curve_point(iters, lloyd_round(cent)))
+        return df.sparkSession.createDataFrame(
+            curve, "iter bigint, n_points bigint, inertia bigint"
+        )
+    assigned = assigner(cent)
+
+    def labels(batches):
+        for pdf, _, cid, d2 in assigned(batches):
+            yield pd.DataFrame({"id": pdf["id"], "cid": cid.astype("int64"), "d2": d2})
+
+    return (
+        base.mapInPandas(labels, "id bigint, cid bigint, d2 bigint")
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
             F.sum("id").alias("id_checksum"),
             F.sum("d2").alias("inertia"),
         )
-    )
-    if not inertia_curve:
-        return final
-    frow = final.agg(
-        F.sum("n_members").alias("n"), F.sum("inertia").alias("i2")
-    ).collect()[0]
-    curve.append((iters, int(frow["n"]), int(frow["i2"])))
-    return df.sparkSession.createDataFrame(
-        curve, "iter bigint, n_points bigint, inertia bigint"
     )
 
 

@@ -46,7 +46,7 @@ _MATERIALIZE_REUSED = os.environ.get("SPARK_GRAFT_LINEAGE", "") != "1"
 
 
 def plan_checkpoint(df: DataFrame) -> DataFrame:
-    """Lazy localCheckpoint for a frame consumed by 2+ downstream subtrees
+    """localCheckpoint for a frame consumed by 2+ downstream subtrees
     (guide §3.3: materialize a reused intermediate so its upstream is not
     planned and executed once per consumer). Structural plan tests set
     ``_MATERIALIZE_REUSED = False`` to see the un-materialized plan — as
@@ -54,14 +54,30 @@ def plan_checkpoint(df: DataFrame) -> DataFrame:
     where executor loss must recompute, not fail); the computation is
     identical either way.
 
-    DETERMINISM PRECONDITION (ADVICE r13): a lazy localCheckpoint
-    materializes only the partitions its FIRST action scans (a take(1)
-    probe computes one partition; the rest materialize later under other
-    jobs). Every upstream fed through here must therefore be
+    NOT LAZY UNDER AQE: ``eager=False`` only defers the RDD's own
+    materialization. Building the checkpointed Dataset calls
+    ``physicalPlan.execute()``, and with AQE on that runs every upstream
+    shuffle stage at the call site — e.g. a groupBy checkpointed lazily and
+    then counted is 1 job at the checkpoint plus 2 at the action (AQE off:
+    0 plus 1). So an operator that checkpoints shuffle-fed frames submits
+    jobs while it is still being BUILT: all 10 build-phase jobs of
+    ``llm_semantic_dedup_lsh`` (sf0.01, local[2]) are submitted inside
+    ``curation.connected_components``, at its checkpoints and per-round
+    convergence probes. Those checkpoints pay for themselves: with
+    ``SPARK_GRAFT_LINEAGE=1`` (no materialization) the warm op went from
+    2.6-2.9 s to 6.2-7.3 s (build plus action, 4-core host) and its action
+    from 6 jobs to 12, because every round re-runs the whole label
+    lineage.
+
+    DETERMINISM PRECONDITION (ADVICE r13): the checkpoint's partitions are
+    computed by more than one job — shuffle-fed stages at the call site,
+    the final stage under whichever action first scans each partition (a
+    take(1) probe computes one partition; the rest materialize later under
+    other jobs). Every upstream fed through here must therefore be
     set-deterministic — no sample(), no first/collect_list-order
-    dependence, no rand() — or the late-materialized partitions could
-    disagree with the probed one. All current call sites satisfy this
-    (hash/agg/join pipelines over deterministic inputs)."""
+    dependence, no rand() — or partitions computed by different jobs could
+    disagree. All current call sites satisfy this (hash/agg/join pipelines
+    over deterministic inputs)."""
     return df.localCheckpoint(eager=False) if _MATERIALIZE_REUSED else df
 
 

@@ -21,6 +21,10 @@ hold except memory sizing. Everything here is cluster-safe:
     `hinted` inject the ResolvedHint(BROADCAST) a SessionExtensions rule
     would, and `catalog.load_tables` applies it at the registry boundary
     (plan-tested in tests/test_plans.py).
+  - local masters start Python workers through `pyworker` (the stock
+    pyspark daemon minus a per-task re-read of every zip directory on the
+    worker's path); other masters keep the stock daemon, since their
+    executors need not have this package installed.
 """
 
 from __future__ import annotations
@@ -30,6 +34,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Directory holding this package: put on the workers' PYTHONPATH so the JVM
+# resolves the daemon module whatever the driver's working directory is.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_session(
@@ -44,9 +52,10 @@ def get_session(
     for 100 TB-scale execution habits (AQE, adaptive skew join, Arrow).
     """
     cpus = int(DEFAULT_CPUS)
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -68,6 +77,10 @@ def get_session(
         # convert in catalog.load_tables.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "hdp2_5_hive2_spark.pyworker"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

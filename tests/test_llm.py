@@ -1806,6 +1806,45 @@ def test_kmeans_lloyd_inertia_decreases_and_is_deterministic(spark):
         kmeans_lloyd(df.limit(2), k=4)
 
 
+def test_kmeans_lloyd_round_is_one_job(spark):
+    """A Lloyd round is one Arrow pass whose per-partition partial sums
+    return to the driver: building with iters=2 submits exactly one job
+    more than with iters=1 (counted through the job group)."""
+    from hdp2_5_hive2_spark.llm.similarity import kmeans_lloyd
+
+    df = spark.range(0, 64).select(
+        F.col("id").alias("vec_id"),
+        F.array((F.col("id") % 5).cast("double"), (F.col("id") % 3).cast("double"))
+        .alias("embedding"),
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for iters in (1, 2):
+            group = f"kmeans-round-jobs-{iters}"
+            sc.setJobGroup(group, group)
+            kmeans_lloyd(df, k=3, iters=iters)
+            jobs[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[1] >= 3, jobs  # materialize + seeds + one round
+    assert jobs[2] - jobs[1] == 1, jobs
+
+
+def test_kmeans_lloyd_overflow_guard_raises(spark):
+    """Coordinates that fit bigint but whose squared distances cannot stay
+    exact in int64 raise in the kernel instead of wrapping silently."""
+    from hdp2_5_hive2_spark.llm.similarity import kmeans_lloyd
+
+    big = spark.range(0, 16).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat((F.col("id") * float(2**40)).cast("double"), 8).alias("embedding"),
+    )
+    with pytest.raises(Exception, match="kmeans_lloyd: int64 overflow"):
+        kmeans_lloyd(big, k=2, iters=1)
+
+
 def test_oov_rate_bounds(spark):
     """vocab covering everything -> 0 OOV; empty vocab -> all OOV."""
     from hdp2_5_hive2_spark.llm.retrieval import oov_rate
@@ -2291,6 +2330,16 @@ def test_exact_substring_spans_planted(spark):
         t = docs[r["doc_id"]]
         for p in range(r["span_start"], r["span_start"] + r["span_len"] - L + 1):
             assert counts[t[p : p + L]] >= 2, (r, p)
+
+
+def test_exact_substring_spans_bad_id_error_names_the_id(spark):
+    """Ids outside the 31-bit packing range, and NULL ids, fail loudly and
+    the error names the id (a NULL id once raised with a NULL message)."""
+    text = "x" * 60
+    for bad, shown in ((1 << 31, str(1 << 31)), (None, "NULL")):
+        df = spark.createDataFrame([(1, text), (bad, text)], "doc_id bigint, text string")
+        with pytest.raises(Exception, match=f"packing range: {shown}"):
+            dedup.exact_substring_spans(df, min_len=50).collect()
 
 
 def test_cut_spans_removes_planted(spark):

@@ -26,6 +26,7 @@ Usage: python tools/gen_scale_fixture.py [out_dir] [rep]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import numpy as np
@@ -33,6 +34,18 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
+
+# One whitespace token as the engine's tokenizer sees it: Java's \s is the
+# ASCII set, so a non-ASCII space stays inside a token there and here.
+_TOKEN = re.compile(r"\S+", re.ASCII)
+
+
+def suffix_tokens(text: str | None, suf: str) -> str | None:
+    """Append ``suf`` to every whitespace token of ``text``, keeping the
+    whitespace itself, so the per-document token count is unchanged."""
+    if not isinstance(text, str):
+        return text
+    return _TOKEN.sub(lambda m: m.group(0) + suf, text)
 
 
 def main() -> int:
@@ -54,10 +67,7 @@ def main() -> int:
     for k in range(rep):
         suf = f"-k{k}"
         for i, t, lg, s in zip(ids, texts, langs, srcs):
-            t2 = suf.join(t.split(" ")) if isinstance(t, str) else t
-            # suffix every token (join on spaces puts the tag at each
-            # token boundary; the final token gets it explicitly)
-            t2 = (t2 + suf) if isinstance(t2, str) else t2
+            t2 = suffix_tokens(t, suf)
             all_ids.append(k * 20_000_000 + i)
             all_text.append(t2)
             all_lang.append(lg)
