@@ -990,39 +990,55 @@ def exact_substring_spans(
     machine; the distributed re-expression rests on an exactness
     lemma: a duplicated substring of length >= L exists iff one of its
     length-EXACTLY-L windows is duplicated. So hash every length-L
-    window (md5, 16-byte shuffle key), keep windows whose hash count
-    is > 1, and merge overlapping/adjacent window positions per
-    document into maximal spans (gaps-and-islands: a new island starts
-    when the position gap exceeds L).
+    window to a 128-bit key, keep windows whose key count is > 1, and
+    merge overlapping/adjacent window positions per document into
+    maximal spans (gaps-and-islands: a new island starts when the
+    position gap exceeds L).
 
     Returns (id_col, span_start 0-based, span_len) — one row per
     maximal duplicated span.
 
+    The key is two xxhash64 of the window's UTF-8 bytes under different
+    seeds, (h1, h2). Exactness holds unless two DISTINCT windows share
+    the key. Treating the two seeded hashes as independent, that chance
+    over n windows is about n^2/2^129 — about 1.5e-11 for the ~1e14
+    windows of a 100 TB corpus — the same bound as the md5 key
+    (128 bits, n^2/2^129) that the DuckDB oracle keeps. One 64-bit hash
+    alone would be n^2/2^65: ~2.7e8 expected colliding pairs at that
+    scale. (Neither hash resists crafted collisions.)
+
+    Parallelism: the window pass is fenced (llm.text._arrow_fence) —
+    a small input such as a single-file, single-row-group scan is
+    round-robined to the session width before the explode, so the
+    O(corpus bytes) explode + hash + shuffle write runs in that many
+    tasks instead of one; a large input (already >= width splits)
+    passes through unshuffled.
+
     100 TB notes: the window explode is pure codegen (sequence +
-    substring + md5 — no Python), emitting ~(bytes of corpus) rows of
-    (16B hash, packed id|pos); the single wide shuffle on the hash key
-    is the inherent cost of exact (not approximate) substring dedup —
-    what the suffix array trades RAM for on one box, this trades
-    shuffle for across a cluster. Count-over-hash-partition keeps it
-    to ONE exchange before the per-doc island pass (a second, narrow
-    shuffle on id). (id, pos) travel both exchanges as ONE packed
-    bigint ``ip = id<<32 | pos`` (guide §2.3 narrower types: one 8-byte
-    UnsafeRow slot instead of two) — pos < 2^31 always (string length
-    is a signed int) and ids outside [0, 2^31) raise loudly per
-    document BEFORE the explode, so unpacking is exact by
-    construction. Within a document ip orders exactly as pos, so the
-    island pass lags/aggregates the packed value directly. Near-dup
-    pipelines that can tolerate approximation should prefer
-    minhash_lsh_pairs; this is the exact-span tool."""
+    substring + xxhash64 — no Python), emitting ~(bytes of corpus)
+    rows of (two 8-byte hash longs, packed id|pos); the single wide
+    shuffle on the hash key is the inherent cost of exact (not
+    approximate) substring dedup — what the suffix array trades RAM
+    for on one box, this trades shuffle for across a cluster.
+    Count-over-hash-partition keeps it to ONE exchange before the
+    per-doc island pass (a second, narrow shuffle on id). (id, pos)
+    travel both exchanges as ONE packed bigint ``ip = id<<32 | pos``
+    (guide §2.3 narrower types: one 8-byte UnsafeRow slot instead of
+    two) — pos < 2^31 always (string length is a signed int) and ids
+    outside [0, 2^31) raise loudly per document BEFORE the explode, so
+    unpacking is exact by construction. Within a document ip orders
+    exactly as pos, so the island pass lags/aggregates the packed value
+    directly. Near-dup pipelines that can tolerate approximation should
+    prefer minhash_lsh_pairs; this is the exact-span tool."""
     L = int(min_len)
     if L < 2:
         raise ValueError("min_len must be >= 2")
     id_ok = (F.col(id_col) >= 0) & (F.col(id_col) < F.lit(1 << 31))
-    win = (
-        docs.where(F.length(text_col) >= L)
-        .select(
-            # loud per-DOC guard (pre-explode, so ~free per window row):
-            # the bigint packing below is bijective only for 31-bit ids.
+    base = _arrow_fence(
+        docs.where(F.length(text_col) >= L).select(
+            # loud per-DOC guard, in its own Project below the explode so
+            # it runs once per document, not once per window row: the
+            # bigint packing below is bijective only for 31-bit ids.
             F.when(id_ok, F.col(id_col).cast("bigint"))
             .otherwise(
                 F.raise_error(
@@ -1038,22 +1054,28 @@ def exact_substring_spans(
             )
             .alias("_id"),
             F.col(text_col).alias("_t"),
-            F.explode(
-                F.sequence(F.lit(0), F.length(text_col) - F.lit(L))
-            ).alias("p"),
-        )
-        .select(
-            F.shiftleft(F.col("_id"), 32)
-            .bitwiseOR(F.col("p").cast("bigint"))
-            .alias("ip"),
-            # unhex: the 16-byte binary digest, not the 32-char hex string
-            # — same grouping (hex↔bytes is bijective), half the shuffle
-            # key bytes on the one corpus-wide exchange (guide §2.3).
-            F.unhex(F.md5(F.expr(f"substring(_t, p + 1, {L})"))).alias("h"),
         )
     )
+    sub = F.expr(f"substring(_t, p + 1, {L})")
+    win = base.select(
+        "_id",
+        "_t",
+        F.explode(F.sequence(F.lit(0), F.length("_t") - F.lit(L))).alias("p"),
+    ).select(
+        F.shiftleft(F.col("_id"), 32)
+        .bitwiseOR(F.col("p").cast("bigint"))
+        .alias("ip"),
+        # the 128-bit window key: two xxhash64 of the window's UTF-8
+        # bytes, the second seeded differently by hashing lit(1) first.
+        # Cheaper to compute than md5, and two fixed-width longs sort and
+        # partition faster than a 16-byte binary.
+        F.xxhash64(sub).alias("h1"),
+        F.xxhash64(F.lit(1), sub).alias("h2"),
+    )
     dup = (
-        win.withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("h")))
+        win.withColumn(
+            "c", F.count(F.lit(1)).over(Window.partitionBy("h1", "h2"))
+        )
         .where(F.col("c") > 1)
         # unpack the doc id as a named column BEFORE the island windows:
         # both Window ops and the final groupBy then key on the same

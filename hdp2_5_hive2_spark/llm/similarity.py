@@ -41,8 +41,10 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def as_double_array(c: Column | str) -> Column:
+    """The array column cast element-wise to array<double>: one codegen
+    Cast, with no higher-order lambda."""
     col = F.col(c) if isinstance(c, str) else c
-    return F.transform(col, lambda x: x.cast("double"))
+    return col.cast("array<double>")
 
 
 def collect_query_block(

@@ -82,18 +82,20 @@ def plan_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def _arrow_fence(df: DataFrame) -> DataFrame:
-    """Parallelism fence for Arrow kernels: mapInPandas inherits the input
-    partitioning, so a small input (a single-file fixture scan) would run
-    the kernel as ONE serial task — repartition those up to the session
-    shuffle width. A LARGE input (the 100 TB case: a scan carrying
-    thousands of splits, or a shuffle-width intermediate) passes through
-    untouched — repartitioning would shuffle every byte of text for
-    nothing. Size >= width * maxPartitionBytes means the scan already
-    yields at least the session width in splits. The size comes from
-    Catalyst's optimizer statistics (sizeInBytes, a ~10 ms metadata
-    lookup) — NOT from df.rdd, whose per-DataFrame physical-planning cost
-    (~40-80 ms, r7 profiling in PERF.md) measurably dragged small-query
-    bench times when this fence briefly probed partition counts.
+    """Parallelism fence for any per-row-heavy map stage — an Arrow kernel
+    (mapInPandas) or a codegen one such as exact_substring_spans' window
+    explode: a map stage inherits the input partitioning, so a small input
+    (a single-file fixture scan) would run it as ONE serial task —
+    repartition those up to the session shuffle width. A LARGE input (the
+    100 TB case: a scan carrying thousands of splits, or a shuffle-width
+    intermediate) passes through untouched — repartitioning would shuffle
+    every byte of text for nothing. Size >= width * maxPartitionBytes
+    means the scan already yields at least the session width in splits.
+    The size comes from Catalyst's optimizer statistics (sizeInBytes, a
+    ~10 ms metadata lookup) — NOT from df.rdd, whose per-DataFrame
+    physical-planning cost (~40-80 ms, r7 profiling in PERF.md) measurably
+    dragged small-query bench times when this fence briefly probed
+    partition counts.
 
     Unknown stats are NOT "huge": non-file-backed plans (LogicalRDD /
     createDataFrame inputs) report sizeInBytes = spark.sql.defaultSizeInBytes,

@@ -6342,16 +6342,17 @@ def llm_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm/dedup.py:exact_substring_spans): every maximal character span
     whose length-60+ text recurs anywhere in the corpus — across
     documents or repeated inside one — found by hashing EVERY length-60
-    window (pure codegen: sequence-explode + substring + md5, no
-    Python), one wide count-over-hash shuffle, then a per-document
-    gaps-and-islands merge. Per document: span count, duplicated chars,
-    first span offset; the DuckDB oracle replays the identical window
-    algebra, so the exactness lemma (dup substring >= L exists iff a
-    length-L window is duplicated), the island merge rule (gap > L
-    breaks) and 0/1-based indexing all have to agree. The suffix-array
-    tool this re-expresses runs on one big-RAM box; the distributed
-    form trades that RAM for one wide-but-parallel shuffle (see the
-    operator's 100 TB note). cut_spans applies the cut step."""
+    window to a 128-bit key (pure codegen: sequence-explode + substring
+    + two seeded xxhash64, no Python), one wide count-over-hash shuffle,
+    then a per-document gaps-and-islands merge. Per document: span
+    count, duplicated chars, first span offset; the DuckDB oracle
+    replays the identical window algebra on an independent key (md5),
+    so the exactness lemma (dup substring >= L exists iff a length-L
+    window is duplicated), the island merge rule (gap > L breaks) and
+    0/1-based indexing all have to agree. The suffix-array tool this
+    re-expresses runs on one big-RAM box; the distributed form trades
+    that RAM for one wide-but-parallel shuffle (see the operator's
+    100 TB note). cut_spans applies the cut step."""
     from hdp2_5_hive2_spark.llm.dedup import exact_substring_spans
 
     docs = load_tables(spark, sf_dir)["documents"]

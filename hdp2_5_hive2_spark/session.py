@@ -76,6 +76,11 @@ def get_session(
         # has no nanosecond timestamp type, so read as epoch-nanos long and
         # convert in catalog.load_tables.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # No per-call call-site capture: with it on, every Column/functions
+        # call costs ~4 extra Py4J round trips (active session, conf read,
+        # origin set and clear) while a query is built. Trade-off: errors
+        # lose their Python call-site (DataFrameQueryContext) block.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master.startswith("local"):
         builder = builder.config(

@@ -2332,6 +2332,49 @@ def test_exact_substring_spans_planted(spark):
             assert counts[t[p : p + L]] >= 2, (r, p)
 
 
+def test_exact_substring_spans_match_brute_force_multibyte(spark):
+    """Exact parity with a brute-force window count plus island merge on
+    text with multi-byte UTF-8 characters (2-, 3- and 4-byte: é, CJK, an
+    emoji) and runs repeated inside one document: positions count
+    characters, while the window hashes read the UTF-8 bytes."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(7)
+    L = 12
+    alpha = "ab é中文😀 "
+    docs = {
+        i: "".join(rng.choice(alpha) for _ in range(rng.randrange(30, 90)))
+        for i in range(10)
+    }
+    shared = "é中😀x文é😀中ab文😀é"  # L+1 characters, 1 to 4 bytes each
+    docs[2] = docs[2][:9] + shared + docs[2][9:]
+    docs[6] = shared + docs[6]
+    rep = "😀é中文" * 5  # repeats itself within document 4 only
+    docs[4] = docs[4][:20] + rep + "zz" + rep + docs[4][20:]
+    docs[9] = "é" * 8  # shorter than L: no windows
+
+    counts = Counter(
+        t[p : p + L] for t in docs.values() for p in range(len(t) - L + 1)
+    )
+    want = set()
+    for i, t in docs.items():
+        dup = [p for p in range(len(t) - L + 1) if counts[t[p : p + L]] > 1]
+        for k, p in enumerate(dup):
+            if k == 0 or p - dup[k - 1] > L:
+                start = p
+            if k + 1 == len(dup) or dup[k + 1] - p > L:
+                want.add((i, start, p + L - start))
+    assert {i for i, _, _ in want} >= {2, 4, 6}
+
+    df = spark.createDataFrame(list(docs.items()), "doc_id bigint, text string")
+    got = {
+        (r["doc_id"], r["span_start"], r["span_len"])
+        for r in dedup.exact_substring_spans(df, min_len=L).collect()
+    }
+    assert got == want
+
+
 def test_exact_substring_spans_bad_id_error_names_the_id(spark):
     """Ids outside the 31-bit packing range, and NULL ids, fail loudly and
     the error names the id (a NULL id once raised with a NULL message)."""

@@ -154,6 +154,18 @@ def test_session_confs_scale_ready(spark):
     assert spark.conf.get("spark.sql.parquet.filterPushdown") == "true"
 
 
+def test_session_skips_call_site_capture(spark, monkeypatch):
+    """get_session turns off PySpark's per-call call-site capture, so a
+    Column/functions call makes no extra Py4J round trips to record it."""
+    from pyspark.errors import utils as err_utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # the flag is read once per process and cached; re-read it from the
+    # active session
+    monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
+    assert err_utils.is_debugging_enabled() is False
+
+
 def test_brute_force_topk_plan_has_no_interpreted_cosine(spark):
     """The exact top-k baseline must be the batch-GEMM plan: no cartesian
     product of corpus x queries and no interpreted higher-order cosine fold
@@ -976,19 +988,27 @@ def test_dhash_pair_join_plan(spark):
 
 def test_exact_substring_spans_plan(spark):
     """ExactSubstr window hashing must be pure codegen — sequence-explode,
-    substring, md5 all JVM-side with ZERO Python eval nodes anywhere —
-    and exactly two exchanges: the wide count-over-hash shuffle plus the
-    narrow per-document island pass."""
+    substring and two xxhash64 all JVM-side with ZERO Python eval nodes
+    anywhere — with exactly two hash exchanges: the wide count-over-hash
+    shuffle plus the narrow per-document island pass. A single-partition
+    input is round-robined before the explode, so the window pass runs
+    in parallel, and the id-range guard runs per document: below the
+    explode, not in the per-window Project above it."""
     from hdp2_5_hive2_spark.llm.dedup import exact_substring_spans
 
     docs = spark.createDataFrame(
         [(i, "text body %d " % i * 20) for i in range(32)],
         "doc_id bigint, text string",
-    )
+    ).coalesce(1)
     plan = _executed(exact_substring_spans(docs, min_len=50))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
-    assert "md5" in plan and "Generate explode" in plan, plan
+    assert plan.count("xxhash64(") == 2, plan
+    assert "md5" not in plan and "unhex" not in plan, plan
+    below_generate = plan.split("Generate explode", 1)[1]
+    assert "RoundRobinPartitioning" in below_generate, plan
+    assert "raise_error" in below_generate, plan
+    assert "raise_error" not in plan.split("Generate explode", 1)[0], plan
 
 
 def test_jsonl_field_extraction_stays_jvm_side(spark, tmp_path):
@@ -1075,6 +1095,21 @@ def test_no_partitionless_ranking_window_in_package():
         "partition-less RANKING window spec(s) — use bounded_rank or "
         f"orderBy().limit(k): {offenders}"
     )
+
+
+def test_lsh_dup_pairs_vector_cast_has_no_lambda(spark, full_plans):
+    """as_double_array is one codegen Cast on the whole array, not an
+    interpreted per-element transform lambda."""
+    from hdp2_5_hive2_spark.llm.similarity import lsh_dup_pairs
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3 + 1), float(i)] * 32) for i in range(16)],
+        "vec_id bigint, embedding array<float>",
+    )
+    plan = _executed(lsh_dup_pairs(vecs, dim=64))
+    assert "MapInPandas" in plan, plan
+    assert "lambdafunction" not in plan, plan
+    assert "cast(embedding" in plan, plan
 
 
 def test_source_overlap_ngrams_come_from_arrow_kernel(spark, full_plans):

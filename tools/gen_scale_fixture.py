@@ -2,8 +2,8 @@
 probe (VERDICT r13 #4: at sf0.1 every bench query is scheduling-dominated
 and the low/high-core ratio reads ~1; a real parallelism signal needs more
 rows). NOT test data: correctness stays pinned to the driver's read-only
-/root/testdata SFs — this fixture exists only so tools/opt_measure.py can
-read a core-count scaling ratio on the heavy operators.
+test-data SFs — this fixture exists only to read core-count scaling
+ratios on the heavy operators.
 
 Layout: documents.parquet is sf0.1's 5000 documents replicated REP times;
 replica k offsets doc_id by k*20_000_000 (clear of every planted +1M..+4M

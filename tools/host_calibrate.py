@@ -4,11 +4,11 @@ Round-over-round bench ratios assume the HOST is the same speed in both
 rounds. Round 10 showed it is not: a full frozen-suite run read 1.35x vs
 BENCH_r09 with golden plans byte-identical, untouched modules (TPC-H,
 window_*, events_*) rising uniformly, vmstat 100% idle / 0% steal, and
-`tools/riser_check.py` warm best-of-5 re-measures STILL 1.4x high on
-queries whose code and plans had not changed since round 5 — while q3's
-dedicated-session warm read came in BELOW its r9 number. That pattern is
-a slower/noisier host this boot, not a code regression, but without a
-fixed-work probe there was no number to prove it.
+warm best-of-5 re-measures STILL 1.4x high on queries whose code and
+plans had not changed since round 5 — while q3's dedicated-session warm
+read came in BELOW its r9 number. That pattern is a slower/noisier host
+this boot, not a code regression, but without a fixed-work probe there
+was no number to prove it.
 
 This tool is that number: a deterministic CPU workload whose ops/sec
 depends only on host speed (never on repo code), recorded per round in
