@@ -3,48 +3,34 @@
 The external driver verifies queries in ALPHABETICAL name order and has a
 bounded per-round budget (~50 names/round observed in rounds 1-6). Plain
 registry names therefore decide WHAT gets verified, and this module assigns
-every registry query a zero-padded numeric prefix
-(``000_storage_rcfile_roundtrip``) so the alphabetical order the driver
-uses IS the priority order we choose.
+every registry query a zero-padded numeric prefix (``000_<name>``) so the
+alphabetical order the driver uses IS the priority order we choose.
 
-Structure (VERDICT r5 #2 + VERDICT r6 #2 — round-boundary-proof by
-construction, twice over):
+The order is DERIVED from the recorded ``CORRECTNESS_r*.json`` files; no
+per-round list is kept by hand, so a new round's file rotates the window
+with no code edit (:func:`rotation_plan`):
 
-- ``green_union()`` / ``dark_queries()`` are DERIVED from the recorded
-  ``CORRECTNESS_r*.json`` files at call time. There is no hard-coded dark
-  list to go stale: when a new round's file lands, the dark set shrinks
-  automatically and the ordering below re-derives.
-- ``_ROTATION_PLAN`` is the frozen per-round *plan*: the intended priority
-  order for every name we deliberately place. Dark names always jump to
-  the head (first verification beats re-verification under any budget
-  shortfall); planned names follow in plan order; everything else trails
-  alphabetically. Because the plan's head IS the expected dark set, the
-  order is stable when the next CORRECTNESS file lands — names simply stop
-  being "dark" without moving.
-- ``_NEW_THIS_ROUND`` is ROUND-SCOPED (VERDICT r6 #2): the declaring round
-  is recorded alongside the list, and the "new names have no verdict"
-  invariant compares against ``green_union(before_round=declared)`` — the
-  green union as it stood when the tier was declared. The driver landing
-  this round's own CORRECTNESS file therefore can never make the invariant
-  stale (the r4/r5/r6 boundary failure class).
+1. dark names first — no green verdict in any recorded round. A first
+   verification beats a re-verification under any budget shortfall;
+2. then the names in ``_REVERIFY`` whose newest green is older than the
+   round their code changed in. An entry expires by itself once a green
+   from that round lands;
+3. then every other name, oldest newest-green first (the queue
+   ``tools/newest_green.py`` prints), ties alphabetical. Each round's
+   window therefore moves on to the stalest verdicts, and no name's newest
+   verdict ages past ~len(REGISTRY)/50 rounds.
 
-Round-13 plan (VERDICT r12 #3/#4 + ADVICE r12):
+``_NEW_THIS_ROUND_DECLARED`` is the round in progress: one past the latest
+recorded round. ``_NEW_THIS_ROUND`` is the dark set: a query added since
+the last recorded round has no verdict yet, so it is dark by construction
+and leads the order. Because the declared round is past every recorded
+file, the no-verdict invariant checked against
+``green_union(before_round=_NEW_THIS_ROUND_DECLARED)`` holds by definition
+and cannot go stale when a file lands.
 
-- Plan head — this round's NEW queries (the seven pre-probed TODO_NEXT
-  candidates: positional-boilerplate audit, session gap-threshold sweep,
-  diurnal load profile, windowed TTR per source, ANN deletion-staleness
-  recall, whale-concentration value Pareto, event-type mix drift): dark
-  by construction, auto-lead via ``dark_queries()``.
-- Tier 3 — kernels round 13 touches (ADVICE r12): ``llm_ivf_probe_sweep``
-  (recall_centi renamed to recall_milli — the value is n_hits×100 over
-  10 ground-truth neighbors, milli scale) and ``llm_front_coding_gain``
-  (counters coalesced to 0 on an empty vocabulary, matching the
-  oracle's count(*) semantics); their r12 greens predate the reworks.
-- Then budget fill: oldest-verdict-first re-verification — the
-  alphabetical head (41 names) of the 49-name r5 block, the oldest
-  newest-green in the registry after r12 rotated the r4 queue
-  (`tools/newest_green.py` prints it). 7 + 2 + 41 = exactly the 50-name
-  window; the r5 tail (8 storage names) heads round 14's fill.
+:func:`driver_order` evaluates the order against any green union (a
+simulated future round, say): its dark names lead, and everything else
+keeps its ``_ROTATION_PLAN`` slot.
 
 The prefix is presentation-only: `REGISTRY` keys, tests and bench.py keep
 the plain names. ``prefixed -> plain`` is recoverable by stripping
@@ -56,425 +42,126 @@ from __future__ import annotations
 import json
 import pathlib
 import re
+from collections.abc import Iterator
 
 from hdp2_5_hive2_spark.queries import REGISTRY, QuerySpec
 
 _REPO_ROOT = pathlib.Path(__file__).resolve().parents[2]
 
-# Tier 2 — queries added THIS round, with the round that declared the tier.
-# The no-verdict invariant is evaluated against green_union(before_round=
-# _NEW_THIS_ROUND_DECLARED), which is immutable once the round's files are
-# in place — landing CORRECTNESS_r07.json cannot stale it.
-_NEW_THIS_ROUND_DECLARED: int = 13
-_NEW_THIS_ROUND: list[str] = [
-    "llm_positional_boilerplate",   # top-term share per head position (r13)
-    "events_session_gap_sweep",     # sessions at gap thr 1800/3600/7200 (r13)
-    "events_diurnal_profile",       # hour-of-day load + peak-to-mean (r13)
-    "llm_windowed_ttr",             # 50-token-window TTR per source (r13)
-    "llm_ann_staleness_recall",     # recall@10 with every-5th dropped (r13)
-    "events_value_pareto",          # top-decile value share, cents (r13)
-    "events_type_mix_drift",        # half-vs-half type-mix L1 drift (r13)
-]
+# Re-verify map {name: round its code changed in}: a green from before that
+# round no longer covers the shipped code, so the name leads the window
+# until that round's file records it green. Expired entries may be deleted.
+_REVERIFY: dict[str, int] = {
+    "llm_exact_substring_dedup": 15,  # window pass fenced, 2×xxhash64 key
+    "llm_kmeans_clusters": 15,        # one Arrow pass per Lloyd round
+    "llm_kmeans_inertia": 15,         # same Lloyd kernel as kmeans_clusters
+}
+# Decision, round 15: `similarity.as_double_array` became one array cast
+# instead of a transform lambda, which changes the expression tree of every
+# consumer. They take no re-lead: each consumer's oracle test passes
+# hash-identical, and the oldest-first order reaches them anyway. Recorded
+# here so the omission is a decision, not an oversight.
 
-# Frozen round-12 tier (was _NEW_THIS_ROUND while round 12 was current) —
-# all verified green in CORRECTNESS_r12 window positions 000-007.
-_R12_TIER: list[str] = [
-    "fn_substring_index",             # MySQL-style splitter, 5 regimes (r12)
-    "llm_jaccard_containment_gap",    # truncation/quote dedup detector (r12)
-    "llm_md5_draw_uniformity",        # hash-draw sampler canary (r12)
-    "llm_ivf_probe_sweep",            # recall@10 at nprobe 1/2/4 (r12)
-    "events_interarrival_burstiness", # exact-int CoV² bot screen (r12)
-    "llm_prefix_echo",                # head-bigram echo forensics (r12)
-    "llm_length_bands",               # nearest-rank p10/p50/p90 (r12)
-    "llm_front_coding_gain",          # sorted-vocab prefix compression (r12)
-]
 
-# Frozen round-11 tier (was _NEW_THIS_ROUND while round 11 was current) —
-# all verified green in CORRECTNESS_r11 window positions 000-018.
-_R11_TIER: list[str] = [
-    "llm_dup_triangle_closure",    # 2-path triangle closure rate (r11)
-    "llm_ivf_cell_balance",        # coarse-quantizer occupancy audit (r11)
-    "llm_vocab_half_drift",        # half-vs-half L1 drift, top-16 basket (r11)
-    "llm_simpson_collision",       # per-source Simpson collision mass (r11)
-    "llm_shard_skew_audit",        # token-weighted hash-vs-range skew (r11)
-    "llm_zipf_ratio_curve",        # top-16 Zipf ratio health check (r11)
-    "llm_header_boilerplate",      # shared first-8-gram header rate (r11)
-    "llm_quant_scale_ablation",    # overlap@10 vs scale-1024 reference (r11)
-    "llm_winnowing_density",       # MOSS density sweep vs 2/(w+1) bound (r11)
-    "llm_survivorship_policy",     # keep-newest vs keep-longest ablation (r11)
-    "llm_cross_source_grams",      # source-pair shared-gram matrix (r11)
-    "llm_pii_cooccurrence",        # planted digit+email window audit (r11)
-    "llm_heaps_vocab_growth",      # vocab checkpoints at 25/50/100% (r11)
-    "llm_length_gini",             # per-source length inequality micro (r11)
-    "llm_novelty_decay",           # first-seen 8-gram share per decile (r11)
-    "llm_embedding_norm_audit",    # pow2 histogram of int sq-norms (r11)
-    "llm_kmeans_inertia",          # Lloyd per-iteration inertia curve (r11)
-    "llm_packing_waste_sweep",     # next-fit waste at C=128/256/512 (r11)
-    "events_interleave_schedule",  # WFQ event-type interleave + twin (r11)
-]
-
-# Frozen round-10 tier (was _NEW_THIS_ROUND while round 10 was current) —
-# all verified green in CORRECTNESS_r10 window positions 000-020.
-_R10_TIER: list[str] = [
-    "llm_hapax_audit",             # per-source vocabulary-tail audit (r10)
-    "llm_burstiness",              # Church-Gale cf/df boilerplate screen (r10)
-    "llm_ppswor_sample",           # stratified md5-priority PPSWOR sample (r10)
-    "llm_token_budget_alloc",      # Chinchilla token-budget allocation (r10)
-    "llm_fertility_by_source",     # BPE-ish tokenizer fertility audit (r10)
-    "llm_consistent_hash_moves",   # 64-vnode ring rebalance churn audit (r10)
-    "llm_ngram_coverage_curve",    # top-N 8-gram coverage (memorization) (r10)
-    "llm_contamination_position",  # decile heatmap of eval-hit positions (r10)
-    "llm_span_dedup_mask",         # span-mask retained-token audit (r10)
-    "llm_dedup_threshold_sweep",   # exact Jaccard threshold sensitivity (r10)
-    "llm_temperature_sweep",       # mixture weights at T=1/0.5/0.25 (r10)
-    "llm_rank_stability",          # Kendall-tau run-perturbation audit (r10)
-    "llm_cluster_size_powerlaw",   # pow2 dup-cluster size histogram (r10)
-    "llm_dup_graph_2core",         # synchronized 2-core degree peel (r10)
-    "llm_mixture_interleave",      # weighted-fair-queueing schedule (r10)
-    "llm_recall_curve",            # recall@1/5/10 of deterministic IVF (r10)
-    "llm_opq_rotation_audit",      # signed-permutation code balance (r10)
-    "llm_mmr_diversify",           # exact-int MMR greedy top-6 of 12 (r10)
-    "llm_packing_contamination",   # contaminated-bin exposure audit (r10)
-    "llm_compaction_stream",       # keyed compaction fold + stream twin (r10)
-    "fn_reflect2",                 # instance-method reflection shim (r10 audit)
-]
-
-# Frozen round-9 tier (was _NEW_THIS_ROUND while round 9 was current) —
-# all verified green in CORRECTNESS_r09 window positions 000-019.
-_R9_TIER: list[str] = [
-    "llm_splade_topk",             # learned-sparse saturated-impact serving (r9)
-    "llm_query_likelihood",        # Dirichlet-smoothed QL ranking (r9)
-    "llm_ndcg_eval",               # exact-fraction nDCG@10 eval harness (r9)
-    "llm_license_propagation",     # robots/license host→page governance (r9)
-    "llm_shard_compaction_audit",  # small-files shard compaction plan (r9)
-    "llm_pack_greedy_bins",        # boundary-aware next-fit packing (r9)
-    "llm_dup_2hop_provenance",     # 2-hop dup-graph lineage chains (r9)
-    "llm_reference_novelty",       # 8-gram novelty vs reference corpus (r9)
-    "llm_contamination_spans",     # consecutive-hit span islands (r9)
-    "llm_bloom_fp_audit",          # bloom-vs-exact false-positive audit (r9)
-    "llm_power_iteration",         # exact-int Gram power iteration (r9)
-    "llm_cosine_histogram",        # signed cos² pair-similarity histogram (r9)
-    "llm_centroid_drift",          # cross-snapshot centroid L1 drift (r9)
-    "llm_quantization_error",      # low-bit coarsening error audit (r9)
-    "llm_sign_code_balance",       # ITQ-style sign-code bucket skew (r9)
-    "llm_knn_reciprocity",         # mutual-kNN graph health audit (r9)
-    "llm_quota_allocation",        # Hamilton largest-remainder quotas (r9)
-    "llm_curriculum_stages",       # difficulty-staged curriculum plan (r9)
-    "llm_split_doc_chains",        # head/tail seam reassembly pairs (r9)
-    "llm_wilson_quality",          # Wilson-LB domain quality ranking (r9)
-]
-
-# Frozen round-7/8/9 tier 3s — all re-verified green in their rounds'
-# CORRECTNESS windows; they keep their post-dark plan slots but no longer
-# need priority.
-_R7_CHANGED: list[str] = [
-    "llm_bm25_rank",
-    "llm_dsir_weights",
-    "llm_vocab_coverage",
-    "events_session_paths",
-]
-_R8_CHANGED: list[str] = [
-    "llm_pq_topk",
-    "llm_token_lift",
-    "llm_source_overlap_matrix",
-    "llm_decontaminate",
-]
-_R9_CHANGED: list[str] = [
-    "llm_decontaminate_bloom",
-    "llm_token_lift",
-]
-_R10_CHANGED: list[str] = [
-    "llm_decontaminate_bloom",
-]
-_R11_CHANGED: list[str] = [
-    "fn_reflect2",
-    "llm_kmeans_clusters",
-    "llm_consistent_hash_moves",
-]
-_R12_CHANGED: list[str] = [
-    "llm_novelty_decay",
-    "llm_vocab_half_drift",
-]
-
-# Tier 3 — green in a prior round but re-implemented/touched this round; a
-# stale green no longer covers the shipped code. Round 13 closes the two
-# ADVICE r12 query-path items: llm_ivf_probe_sweep's recall column renamed
-# recall_centi → recall_milli (n_hits×100 over 10 ground-truth neighbors is
-# milli scale — same values, new schema, both engines), and
-# llm_front_coding_gain's counters coalesced to 0 on an empty vocabulary
-# (the sum-over-zero-rows aggregate read NULL while the oracle's count(*)
-# read 0). Both expression trees changed, so the r12 greens predate the
-# shipped code.
-_CHANGED_THIS_ROUND: list[str] = [
-    "llm_ivf_probe_sweep",
-    "llm_front_coding_gain",
-]
-# Tier-3 decision, round 12: storage_corpus.IO_ROOT moved from a fixed
-# /tmp path to a per-process one (harness-concurrency isolation). That
-# touches every storage query's OUTPUT PATH but no expression tree; the
-# three r4-era storage names are in this round's fill block anyway, and
-# every other storage name was verified on the new path by the session's
-# five full two-scale oracle sweeps (387/387 each). No re-lead taken —
-# recorded here so the omission is a decision, not an oversight.
-
-# Frozen round-6 tier (was _NEW_THIS_ROUND while round 6 was current).
-# Everything past window position 049 of CORRECTNESS_r06.json is still dark
-# and derives to the head of round 7's order automatically.
-_R6_TIER: list[str] = [
-    "llm_semantic_dedup_lsh",       # SemDeDup scale seam: LSH pair source (r6)
-    "fn_ewah_cardinality",          # run-aware EWAH kernels, dense ones-runs (r6)
-    "matchpath_skip_to_next_row",   # MatchPath AFTER MATCH SKIP TO NEXT ROW (r6)
-    "llm_bpe_pair_counts",          # BPE tokenizer-training pair stats (r6)
-    "llm_source_temperature_mix",   # temperature mixture weights, T=0.5 (r6)
-    "llm_filter_funnel",            # quality-gate survival funnel (r6)
-    "llm_token_diversity",          # Gini–Simpson repetition filter (r6)
-    "llm_quantized_ann_recall",     # int8 ANN recall@10 audit (r6)
-    "llm_dsir_weights",             # DSIR importance resampling (r6)
-    "llm_containment_dedup",        # substring-containment dedup (r6)
-    "llm_source_cap",               # per-domain cap, hash-ordered (r6)
-    "llm_minhash_est_error",        # MinHash estimate-vs-exact audit (r6)
-    "llm_split_leakage",            # cross-split near-dup matrix (r6)
-    "llm_corpus_diff",              # snapshot diff, md5 manifests (r6)
-    "llm_anchor_cells",             # IVF/shard cell-balance audit (r6)
-    "llm_quality_features",         # quality-filter feature matrix (r6)
-    "llm_dup_rate_sample",          # hash-sample dup-rate estimate (r6)
-    "llm_contrastive_pairs",        # anchor/pos/neg triple mining (r6)
-    "llm_dedup_clusters_star",      # large/small-star CC backend (r6)
-    "llm_heldout_lm_score",         # CCNet held-out LM scoring (r6)
-    "llm_fim_transform",            # fill-in-middle PSM restructuring (r6)
-    "llm_lang_confusion",           # lang-ID confusion matrix QA (r6)
-    "llm_chunk_dedup_keep_first",   # CCNet chunk-removal transform (r6)
-    "llm_balanced_shards",          # two-phase-rank LPT sharding (r6)
-    "llm_rrf_fusion",               # reciprocal-rank hybrid retrieval (r6)
-    "llm_top_ngram_fraction",       # Gopher top-bigram dominance filter (r6)
-    "llm_two_stage_rerank",         # quantized-candidates + exact rerank (r6)
-    "llm_cross_dedup_incremental",  # new-batch vs corpus-index LSH dedup (r6)
-    "llm_length_trim",              # interquartile exact-percentile trim (r6)
-    "llm_epoch_plan",               # temperature-mixture repeat factors (r6)
-    "llm_ccnet_buckets",            # LM-score head/middle/tail tertiles (r6)
-    "llm_bpe_merge_step",           # greedy merge-round accounting (r6)
-    "llm_bpe_train3",               # 3-round iterated BPE training (r6)
-    "llm_bpe_fertility_gain",       # learned-merge compression audit (r6)
-    "llm_decontaminate_bloom",      # constant-memory Bloom decontamination (r6)
-    "llm_mixture_realize",          # md5-rounded epoch-plan materialization (r6)
-    "llm_containment_filter",       # contained-doc removal transform (r6)
-    "llm_bpe_doc_tokens",           # per-doc cost under learned merges (r6)
-    "llm_hard_negatives",           # ANN hard-negative mining (r6)
-    "llm_kn_bigram_score",          # interpolated Kneser-Ney bigram LM (r6)
-    "llm_nb_classify",              # hashed Naive Bayes classifier (r6)
-    "llm_chars_per_token_fit",      # closed-form linfit sufficient stats (r6)
-    "llm_pagerank_centrality",      # integer PageRank over dup graph (r6)
-    "llm_lsh_band_curve",           # LSH banding S-curve audit (r6)
-    "events_heavy_hitters_cms",     # count-min sketch heavy hitters (r6)
-    "llm_classifier_auc",           # exact tie-corrected ROC-AUC (r6)
-    "llm_ks_length_drift",          # exact two-sample KS statistic (r6)
-    "llm_dup_graph_stats",          # triangle/wedge graph health check (r6)
-    "llm_pareto_quality_length",    # skyline / Pareto-front operator (r6)
-    "llm_url_canonical_dedup",      # URL canonicalization dedup (r6)
-    "llm_hll_ngram_ndv",            # engine-portable HyperLogLog ndv (r6)
-    "llm_kmeans_clusters",          # distributed exact-int Lloyd k-means (r6)
-    "llm_oov_rate",                 # capped-vocab held-out OOV rate (r6)
-    "events_zorder_layout",         # Morton-key clustering + skip audit (r6)
-    "llm_posting_lists",            # block-encoded inverted index (r6)
-    "llm_hll_split_overlap",        # HLL inclusion-exclusion overlap (r6)
-    "events_scd2_intervals",        # SCD2 state-history intervals (r6)
-    "llm_pq_topk",                  # product-quantization ADC serving (r6)
-    "llm_fuzzy_vocab_pairs",        # FastSS deletion-neighborhood match (r6)
-    "llm_token_lift",               # co-occurrence lift association (r6)
-    "llm_embedding_dim_stats",      # z-score feature stats table (r6)
-    "qa_constraint_report",         # Deequ-style constraint audit (r6)
-    "events_dwell_time",            # capped next-event dwell attribution (r6)
-    "qa_k_anonymity",               # equivalence-class privacy audit (r6)
-    "qa_l_diversity",               # sensitive-value diversity audit (r6)
-    "events_attribution_last_touch",  # as-of last-touch attribution (r6)
-    "llm_blocklist_filter",         # broadcast domain blocklist gate (r6)
-    "events_ohlc_bars",             # OHLC bar downsampling, min_by/max_by (r6)
-    "events_mad_outliers",          # MAD robust outlier screen (r6)
-    "llm_badwords_filter",          # C4 blocklist-term content gate (r6)
-    "llm_quantile_normalize",       # cross-source rank calibration (r6)
-    "llm_setsim_join",              # exact PPJoin prefix-filter joins (r6)
-    "llm_cluster_safe_split",       # cluster-atomic split assignment (r6)
-    "events_frequent_sequences",    # GSP trigram support mining (r6)
-    "llm_phrase_search",            # positional-index phrase match (r6)
-    "llm_kwic_concordance",         # keyword-in-context windows (r6)
-    "qa_benford_audit",             # Benford first-digit forensic QA (r6)
-    "events_temporal_scd2_join",    # point-in-time SCD2 lookup join (r6)
-    "llm_dedup_survivorship",       # winner/loser source dedup matrix (r6)
-    "llm_source_overlap_matrix",    # source-pair 8-gram Jaccard matrix (r6)
-    "qa_schema_profile",            # one-pass Deequ-style column profile (r6)
-    "llm_maxsim_rerank",            # ColBERT late-interaction MaxSim (r6)
-    "events_gap_histogram",         # pow2 inter-arrival gap histogram (r6)
-    "events_watermark_lag_audit",   # watermark sizing disorder audit (r6)
-    "events_peak_concurrency",      # sweep-line max simultaneous sessions (r6)
-    "analyze_equiheight_histogram", # CBO equi-depth histogram stat (r6)
-    "events_incremental_rollup",    # monoid-merge aggregate maintenance (r6)
-    "storage_parquet_metadata_audit",  # footer min/max data-skipping audit (r6)
-    "llm_dedup_cost_report",        # exact/prefix/near dedup cost tiers (r6)
-    "storage_xml_roundtrip",        # Spark-4 native XML source roundtrip (r6)
-    "fn_covar_corr",                # covar/corr/var via exact moments (r6)
-    "agg_mode_by_group",            # deterministic mode aggregate (r6)
-    "window_running_distinct",      # first-seen running distinct count (r6)
-    "events_gap_fill_locf",         # dense-grid LOCF gap filling (r6)
-    "qa_fanout_histogram",          # FK fan-out / skew-candidate profile (r6)
-    "events_changepoint_cusum",     # integer CUSUM changepoint estimator (r6)
-    "events_item_covisitation",     # item-to-item CF co-occurrence (r6)
-    "storage_cdc_column_diff",      # CDC diff with column attribution (r6)
-    "storage_merge_schema_read",    # mergeSchema footer-union evolution (r6)
-    "hive_char_semantics",          # CHAR/VARCHAR padding drift guard (r6)
-    "storage_avro_roundtrip",       # from-spec Avro container codec (r6)
-    "multimodal_image_decode_stats",  # real PNG codec decode stats (r6)
-    "multimodal_audio_decode_stats",  # real WAV codec decode stats (r6)
-    "multimodal_video_frame_stats",   # real AVI container frame stats (r6)
-    "multimodal_video_container_audit",  # ISO BMFF sample-table audit (r6)
-    "multimodal_image_neardup_pairs",  # dHash perceptual near-dedup (r6)
-    "multimodal_audio_activity_segments",  # VAD-style energy islands (r6)
-    "multimodal_video_scene_cuts",     # frame-diff energy cut detection (r6)
-    "multimodal_audio_container_audit",  # MP3 frame-header walk audit (r6)
-    "llm_warc_html_extract",           # WARC→HTTP→HTML→text chain (r6)
-    "multimodal_flac_decode_stats",    # from-spec FLAC codec roundtrip (r6)
-    "llm_document_text_extract",       # DOCX/EPUB/PDF extraction chain (r6)
-    "llm_tfrecord_roundtrip",          # TFRecord+Example wire formats (r6)
-    "multimodal_subtitle_alignment",   # SRT parse + interval pairing (r6)
-    "llm_bpe_apply_count",             # tokenizer-true token pricing (r6)
-    "llm_jsonl_shard_ingest",          # .jsonl/.gz/.zst corpus shards (r6)
-    "llm_exact_substring_dedup",       # ExactSubstr span detection (r6)
-    "storage_acid_lifecycle",          # Hive-ACID delta/ROW__ID lifecycle (r6)
-]
-
-# Tier 4 — budget fill: oldest still-standing verdicts first (VERDICT r8
-# #3 — no query's newest verdict should age past 5 rounds). The r4 queue
-# rotated when CORRECTNESS_r12 landed; the oldest block is now the 49
-# names whose newest green is r5 (`python tools/newest_green.py` prints
-# the queue). 49 does not fit alongside 7 new + 2 changed, so this is the
-# alphabetical HEAD (41 names) — the 8-name storage tail heads round 14.
-_FILL_REVERIFY: list[str] = [
-    "agg_multi_distinct",
-    "cluster_by",
-    "cte_reuse",
-    "distribute_sort_by",
-    "events_churned_users",
-    "events_dau_wau",
-    "events_dedup_minute",
-    "events_retention_cohorts",
-    "events_session_window_native",
-    "events_sliding_window",
-    "events_stream_static_join",
-    "events_tumbling_window",
-    "except_all_keys",
-    "except_distinct",
-    "fn_conditional",
-    "fn_datetime",
-    "fn_explode_tokens",
-    "fn_format_printf",
-    "fn_hash_crypto",
-    "fn_mask",
-    "llm_ann_topk",
-    "llm_contamination_by_source",
-    "llm_dedup_keep_best",
-    "llm_embedding_dup_pairs",
-    "llm_embedding_outliers",
-    "llm_exact_dedup",
-    "llm_ivf_ann_topk",
-    "llm_knn_classify",
-    "llm_lsh_ann_topk",
-    "llm_minhash_dedup",
-    "llm_ngram_jaccard",
-    "llm_prefix_dup_rate",
-    "llm_simhash_dedup",
-    "llm_token_length_histogram",
-    "multimodal_frame_sample",
-    "multimodal_meta_sha",
-    "multimodal_resize_meta",
-    "storage_bucketed_join",
-    "storage_compacted_roundtrip",
-    "storage_csv_roundtrip",
-    "storage_drop_partition",
-]
-
-# The frozen plan. Dark names derive to the front whether or not they are
-# planned; the plan keeps their relative order stable at the boundary.
-# Round 12's post-dark order: this round's new queries (dark, auto-lead),
-# the tier-3 re-verification, then oldest-verdict fill, then the
-# already-re-verified r7-r11 tiers, then everything else
-# alphabetically.
-_ROTATION_PLAN: list[str] = list(
-    dict.fromkeys(  # dedupe, first occurrence wins (a name may be both in a
-        # frozen tier and re-listed as changed; its earliest slot stands)
-        _NEW_THIS_ROUND
-        + _CHANGED_THIS_ROUND
-        + _FILL_REVERIFY
-        + _R12_TIER
-        + _R11_TIER
-        + _R10_TIER
-        + _R9_TIER
-        + _R7_CHANGED
-        + _R8_CHANGED
-        + _R9_CHANGED
-        + _R10_CHANGED
-        + _R11_CHANGED
-        + _R12_CHANGED
-        + _R6_TIER
-        + [
-            "storage_rcfile_roundtrip",     # RCFile container (r5; JVM read path r6)
-            "llm_winnowing_fingerprint",    # MOSS winnowing fingerprints (r5)
-            "llm_fingerprint_overlap",      # fingerprint-bucket overlap pairs (r5)
-            "llm_semantic_dedup",           # SemDeDup keep/drop composition (r5)
-            "fn_ewah_bitmap",               # EWAH bitmap family (r5; run-aware r6)
-            "llm_vocab_drift",              # corpus-drift QA, chi-square ranking (r5)
-        ]
+def is_green(row: dict) -> bool:
+    """The driver's green predicate for one CORRECTNESS row: value hash
+    match, or rows match for an oracle-less check (no hash computed). A row
+    whose hash was computed and mismatched is red even if the rows match."""
+    if row.get("hash_match"):
+        return True
+    return bool(
+        row.get("rows_match")
+        and row.get("hash_match") is None
+        and row.get("err") in (None, "no_oracle")
     )
-)
+
+
+def _recorded(root: pathlib.Path | None) -> list[tuple[int, pathlib.Path]]:
+    """(round, path) of every recorded CORRECTNESS file, oldest first."""
+    found = []
+    for path in (root or _REPO_ROOT).glob("CORRECTNESS_r*.json"):
+        m = re.match(r"CORRECTNESS_r(\d+)", path.name)
+        if m:
+            found.append((int(m.group(1)), path))
+    return sorted(found)
+
+
+def _green_verdicts(root: pathlib.Path | None) -> Iterator[tuple[int, str]]:
+    """(round, plain name) of every green row in the recorded files."""
+    for rnd, path in _recorded(root):
+        for key, row in json.loads(path.read_text()).items():
+            if is_green(row):
+                yield rnd, re.sub(r"^\d+_", "", key)
 
 
 def green_union(
     root: pathlib.Path | None = None, before_round: int | None = None
 ) -> set[str]:
-    """Names with any green driver verdict across the recorded
-    ``CORRECTNESS_r*.json`` files (same predicate the driver uses: value
-    hash match, or rows match for oracle-less checks).
+    """Names with any green driver verdict (:func:`is_green`) across the
+    recorded ``CORRECTNESS_r*.json`` files.
 
     ``before_round`` restricts to files from rounds strictly earlier — the
-    green union as it stood when a tier was declared (VERDICT r6 #2). That
-    view is immutable: later rounds' files landing cannot change it.
+    green union as it stood when a round began (VERDICT r6 #2). That view
+    is immutable: later rounds' files landing cannot change it.
     """
-    green: set[str] = set()
-    for path in sorted((root or _REPO_ROOT).glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path.name)
-        if before_round is not None and m and int(m.group(1)) >= before_round:
-            continue
-        for key, row in json.loads(path.read_text()).items():
-            name = re.sub(r"^\d+_", "", key)
-            if row.get("hash_match") or (
-                row.get("rows_match") and row.get("err") in (None, "no_oracle")
-            ):
-                green.add(name)
-    return green
+    return {
+        name
+        for rnd, name in _green_verdicts(root)
+        if before_round is None or rnd < before_round
+    }
+
+
+def newest_green(root: pathlib.Path | None = None) -> dict[str, int]:
+    """name -> newest round with a green driver verdict."""
+    newest: dict[str, int] = {}
+    for rnd, name in _green_verdicts(root):
+        newest[name] = max(newest.get(name, 0), rnd)
+    return newest
+
+
+def declared_round(root: pathlib.Path | None = None) -> int:
+    """The round in progress: one past the latest recorded round."""
+    return max((rnd for rnd, _ in _recorded(root)), default=0) + 1
+
+
+def rotation_plan(root: pathlib.Path | None = None) -> list[str]:
+    """Every registry name in priority order, derived from the files under
+    ``root``: dark, then stale re-verify entries, then oldest newest-green
+    first; ties alphabetical within each tier."""
+    newest = newest_green(root)
+
+    def rank(name: str) -> tuple[int, int, str]:
+        seen = newest.get(name)
+        if seen is None:
+            return (0, 0, name)
+        tier = 1 if seen < _REVERIFY.get(name, 0) else 2
+        return (tier, seen, name)
+
+    return sorted(REGISTRY, key=rank)
+
+
+_NEW_THIS_ROUND_DECLARED: int = declared_round()
+_ROTATION_PLAN: list[str] = rotation_plan()
 
 
 def dark_queries(green: set[str] | None = None) -> list[str]:
     """Registry names with no green driver verdict in any recorded round,
-    DERIVED from the CORRECTNESS files (VERDICT r5 #2). Ordered by the
-    rotation plan (planned dark names first, unplanned ones — e.g. queries
-    added mid-round — alphabetically after)."""
+    DERIVED from the CORRECTNESS files (VERDICT r5 #2), in rotation-plan
+    order."""
     g = green_union() if green is None else green
-    dark = {n for n in REGISTRY if n not in g}
-    planned = [n for n in _ROTATION_PLAN if n in dark]
-    return planned + sorted(dark - set(planned))
+    return [n for n in _ROTATION_PLAN if n not in g]
+
+
+_NEW_THIS_ROUND: list[str] = dark_queries()
 
 
 def driver_order(green: set[str] | None = None) -> list[str]:
-    """Plain registry names in driver-verification priority order: derived
-    dark names first, then the remaining frozen plan, then everything else
-    alphabetically. Stable when a new CORRECTNESS file lands, because the
-    plan head is the expected dark set."""
+    """Plain registry names in driver-verification priority order: dark
+    names (against ``green``, default the recorded files) first, then the
+    rest of the rotation plan."""
     dark = dark_queries(green)
     seen = set(dark)
-    planned = [
-        n for n in _ROTATION_PLAN if n in REGISTRY and n not in seen
-    ]
-    seen.update(planned)
-    rest = sorted(n for n in REGISTRY if n not in seen)
-    return dark + planned + rest
+    return dark + [n for n in _ROTATION_PLAN if n not in seen]
 
 
 def driver_registry() -> dict[str, QuerySpec]:

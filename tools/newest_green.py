@@ -1,46 +1,29 @@
 #!/usr/bin/env python
 """Print newest-green round per registry name (VERDICT r11 polish #7b).
 
-The fill-queue discipline rotates oldest-verdict-first: every round the
-judge rebuilt the "newest green per name" table by hand from the
-CORRECTNESS_r*.json files. This helper makes that table a one-command
-artifact:
+The driver order (``queries/driver_order.py``) re-verifies oldest
+newest-green first; this helper prints that queue, the "newest green per
+name" table of the CORRECTNESS_r*.json files:
 
     python tools/newest_green.py            # histogram + oldest block
     python tools/newest_green.py --block 4  # names whose newest green is r4
     python tools/newest_green.py --all      # full name -> round table
 
-Green predicate mirrors hdp2_5_hive2_spark.queries.driver_order.green_union
-(the driver's own: hash_match, or rows_match for oracle-less checks).
+The table is ``newest_green`` from hdp2_5_hive2_spark.queries.driver_order,
+so it applies the same green predicate (``is_green``) as the driver order.
 """
 
 from __future__ import annotations
 
 import argparse
 import collections
-import json
 import pathlib
-import re
 import sys
 
-_REPO_ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-
-def newest_green(root: pathlib.Path | None = None) -> dict[str, int]:
-    """name -> newest round with a green driver verdict."""
-    newest: dict[str, int] = {}
-    for path in sorted((root or _REPO_ROOT).glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        for key, row in json.loads(path.read_text()).items():
-            name = re.sub(r"^\d+_", "", key)
-            if row.get("hash_match") or (
-                row.get("rows_match") and row.get("err") in (None, "no_oracle")
-            ):
-                newest[name] = max(newest.get(name, 0), rnd)
-    return newest
+from hdp2_5_hive2_spark.queries import REGISTRY  # noqa: E402
+from hdp2_5_hive2_spark.queries.driver_order import newest_green  # noqa: E402
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -50,15 +33,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     table = newest_green()
-
-    # Registry names with NO green verdict yet (dark) — import lazily so the
-    # helper still works without pyspark on the path.
-    try:
-        from hdp2_5_hive2_spark.queries import REGISTRY  # noqa: PLC0415
-
-        dark = sorted(n for n in REGISTRY if n not in table)
-    except Exception:  # pragma: no cover - registry import is optional here
-        dark = []
+    dark = sorted(n for n in REGISTRY if n not in table)
 
     if args.block is not None:
         for name in sorted(n for n, r in table.items() if r == args.block):
