@@ -207,7 +207,6 @@ def shared_ngram_edges(
     id_col: str = "doc_id",
     n: int = 16,
     max_df: int = 100,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Duplicate-candidate edges (doc_a, doc_b), doc_a < doc_b, for document
     pairs sharing at least one word ``n``-gram with corpus document
@@ -218,13 +217,11 @@ def shared_ngram_edges(
     boilerplate n-grams whose buckets would otherwise fan out quadratically
     — standard practice in suffix-array dedup; raising it only ADDS edges.
 
-    ``checkpoint`` materializes the Arrow n-gram pass once; the frame feeds
-    the df-count aggregation and both sides of the self-join, and exchange
-    reuse does not dedupe Python-kernel subtrees.
+    The Arrow n-gram pass is materialized once (``plan_checkpoint``); the
+    frame feeds the df-count aggregation and both sides of the self-join,
+    and exchange reuse does not dedupe Python-kernel subtrees.
     """
-    ng = word_ngram_rows(df, text_col, id_col, n)
-    if checkpoint:
-        ng = ng.transform(plan_checkpoint)
+    ng = word_ngram_rows(df, text_col, id_col, n).transform(plan_checkpoint)
     # Rows are distinct within a document, so count(*) per ngram == doc freq.
     rare = (
         ng.groupBy("ngram")

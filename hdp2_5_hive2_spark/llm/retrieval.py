@@ -517,8 +517,9 @@ def bigram_lm_score(
     scale = float(1 << q_bits)
     # Materialize the Arrow n-gram pass once: the frame feeds both the
     # corpus-count aggregation and the final per-doc join, and exchange
-    # reuse does not dedupe Python-kernel subtrees (same rationale as
-    # dedup._banded_memo; measured 1.67 s → 1.20 s at sf0.1).
+    # reuse does not dedupe Python-kernel subtrees (same rationale as the
+    # banded frame in dedup.minhash_lsh_pairs; measured 1.67 s → 1.20 s at
+    # sf0.1).
     rows = word_ngram_counts(df, text_col, id_col, n=2).transform(plan_checkpoint)
     model_rows = (
         rows if train_df is None else word_ngram_counts(train_df, text_col, id_col, n=2)

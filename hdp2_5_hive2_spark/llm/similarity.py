@@ -47,6 +47,27 @@ def as_double_array(c: Column | str) -> Column:
     return col.cast("array<double>")
 
 
+_QUERY_HINT = (
+    "the exact paths collect+broadcast every query vector. "
+    "Use lsh_topk or ivf_topk for large query sets."
+)
+
+
+def _check_bound(rows: list, max_rows: int, caller: str, bound: str, hint: str) -> list:
+    if len(rows) > max_rows:
+        raise ValueError(f"{caller}: more than {bound}={max_rows} rows; {hint}")
+    return rows
+
+
+def bounded_collect(df: DataFrame, max_rows: int, caller: str, bound: str, hint: str) -> list:
+    """Collect a broadcast-small block (query set, anchor set, centroid
+    book) to the driver, raising ``ValueError`` instead of OOMing it when
+    ``df`` holds more than ``max_rows`` rows. The message names ``caller``
+    and its cap parameter ``bound``. The limit(max+1) collect keeps the
+    guard a single job (no extra count)."""
+    return _check_bound(df.limit(max_rows + 1).collect(), max_rows, caller, bound, hint)
+
+
 def collect_query_block(
     queries: DataFrame,
     id_col: str = "vec_id",
@@ -62,19 +83,14 @@ def collect_query_block(
     kernels fed this way run ZERO query-side jobs of their own. Each kernel
     still enforces its own ``max_queries`` contract on the shared rows.
 
-    The limit(max+1) collect keeps the size guard a single job."""
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), as_double_array(vec_col).alias("qv"))
-        .limit(max_queries + 1)
-        .collect()
+    The guard is :func:`bounded_collect`'s single job."""
+    return bounded_collect(
+        queries.select(F.col(id_col).alias("qid"), as_double_array(vec_col).alias("qv")),
+        max_queries,
+        caller,
+        "max_queries",
+        _QUERY_HINT,
     )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"{caller}: query set exceeds max_queries={max_queries} rows; "
-            "the exact paths collect+broadcast every query vector. "
-            "Use lsh_topk or ivf_topk for large query sets."
-        )
-    return q_rows
 
 
 def brute_force_topk(
@@ -112,17 +128,11 @@ def brute_force_topk(
     q_id_type = queries.schema[id_col].dataType.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
     if q_rows is None:
-        q_rows = (
-            queries.select(F.col(id_col).alias("qid"), as_double_array(vec_col).alias("qv"))
-            .limit(max_queries + 1)
-            .collect()
+        q_rows = collect_query_block(
+            queries, id_col, vec_col, max_queries, caller="brute_force_topk"
         )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"brute_force_topk: query set exceeds max_queries={max_queries} "
-            "rows; the exact path collects+broadcasts every query vector. "
-            "Use lsh_topk or ivf_topk for large query sets."
-        )
+    # also holds a caller-shared q_rows block to this kernel's own bound
+    _check_bound(q_rows, max_queries, "brute_force_topk", "max_queries", _QUERY_HINT)
     c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv"))
     if not q_rows:
         return (
@@ -211,17 +221,11 @@ def quantized_dot_topk(
     q_id_type = queries.schema[id_col].dataType.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
     if q_rows is None:
-        q_rows = (
-            queries.select(F.col(id_col).alias("qid"), as_double_array(vec_col).alias("qv"))
-            .limit(max_queries + 1)
-            .collect()
+        q_rows = collect_query_block(
+            queries, id_col, vec_col, max_queries, caller="quantized_dot_topk"
         )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"quantized_dot_topk: query set exceeds max_queries={max_queries} "
-            "rows; the exact path collects+broadcasts every query vector. "
-            "Use lsh_topk or ivf_topk for large query sets."
-        )
+    # also holds a caller-shared q_rows block to this kernel's own bound
+    _check_bound(q_rows, max_queries, "quantized_dot_topk", "max_queries", _QUERY_HINT)
     c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv"))
     if not q_rows:
         return c.limit(0).select(
@@ -298,19 +302,15 @@ def quantized_cell_assign(
     import pandas as pd
 
     id_type = df.schema[id_col].dataType.simpleString()
-    c_rows = (
+    c_rows = bounded_collect(
         centroids.select(
             F.col(cell_id_col).alias("cid"), as_double_array(vec_col).alias("cv")
-        )
-        .orderBy("cid")
-        .limit(max_centroids + 1)
-        .collect()
+        ).orderBy("cid"),
+        max_centroids,
+        "quantized_cell_assign",
+        "max_centroids",
+        "IVF coarse books are constant-sized by design",
     )
-    if len(c_rows) > max_centroids:
-        raise ValueError(
-            f"quantized_cell_assign: centroid side exceeds max_centroids="
-            f"{max_centroids}; IVF coarse books are constant-sized by design"
-        )
     if not c_rows:
         raise ValueError("quantized_cell_assign: empty centroid side")
     c_ids = np.asarray([r.cid for r in c_rows])
@@ -882,20 +882,17 @@ def hard_negatives(
 
     a_id_type = anchors.schema[id_col].dataType.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
-    a_rows = (
+    a_rows = bounded_collect(
         anchors.select(
             F.col(id_col).alias("aid"),
             as_double_array(vec_col).alias("av"),
             F.col(label_col).alias("al"),
-        )
-        .limit(max_anchors + 1)
-        .collect()
+        ),
+        max_anchors,
+        "hard_negatives",
+        "max_anchors",
+        "the exact path collects+broadcasts every anchor vector.",
     )
-    if len(a_rows) > max_anchors:
-        raise ValueError(
-            f"hard_negatives: anchor set exceeds max_anchors={max_anchors} "
-            "rows; the exact path collects+broadcasts every anchor vector."
-        )
     c = corpus.select(
         F.col(id_col).alias("negative_id"),
         as_double_array(vec_col).alias("cv"),
@@ -1117,17 +1114,11 @@ def quantized_topk(
     q_id_type = queries.schema[id_col].dataType.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
     if q_rows is None:
-        q_rows = (
-            queries.select(F.col(id_col).alias("qid"), as_double_array(vec_col).alias("qv"))
-            .limit(max_queries + 1)
-            .collect()
+        q_rows = collect_query_block(
+            queries, id_col, vec_col, max_queries, caller="quantized_topk"
         )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"quantized_topk: query set exceeds max_queries={max_queries} "
-            "rows; the quantized brute-force path collects+broadcasts every "
-            "query vector. Use lsh_topk or ivf_topk for large query sets."
-        )
+    # also holds a caller-shared q_rows block to this kernel's own bound
+    _check_bound(q_rows, max_queries, "quantized_topk", "max_queries", _QUERY_HINT)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv")
     )
@@ -1207,18 +1198,15 @@ def nearest_anchor(
     import numpy as np
     import pandas as pd
 
-    a_rows = (
+    a_rows = bounded_collect(
         anchors.select(
             F.col(anchor_id_col).alias("aid"), as_double_array(vec_col).alias("av")
-        )
-        .limit(max_anchors + 1)
-        .collect()
+        ),
+        max_anchors,
+        "nearest_anchor",
+        "max_anchors",
+        "anchors are collected+broadcast by contract",
     )
-    if len(a_rows) > max_anchors:
-        raise ValueError(
-            f"nearest_anchor: anchor set exceeds max_anchors={max_anchors}; "
-            "anchors are collected+broadcast by contract"
-        )
     if not a_rows:
         raise ValueError("nearest_anchor: empty anchor set")
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1544,13 +1532,14 @@ def pq_adc_topk(
     d_sub = dims // n_sub
     cb_sub = cb.reshape(n_cent, n_sub, d_sub)  # (cent, sub, d)
 
-    qrows = qdf.limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_adc_topk: query set exceeds max_queries={max_queries} rows; "
-            "the ADC path collects+broadcasts every query LUT. Use lsh_topk "
-            "or ivf_topk for large query sets."
-        )
+    qrows = bounded_collect(
+        qdf,
+        max_queries,
+        "pq_adc_topk",
+        "max_queries",
+        "the ADC path collects+broadcasts every query LUT. Use lsh_topk "
+        "or ivf_topk for large query sets.",
+    )
     qids = np.asarray([r.query_id for r in qrows], dtype=np.int64)
     qmat = np.asarray([r.q for r in qrows], dtype=np.int64).reshape(
         len(qrows), n_sub, d_sub
@@ -1632,16 +1621,9 @@ def maxsim_topk(
 
     q_id_type = queries.schema[id_col].dataType.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), as_double_array(vec_col).alias("qv"))
-        .limit(max_queries + 1)
-        .collect()
+    q_rows = collect_query_block(
+        queries, id_col, vec_col, max_queries, caller="maxsim_topk"
     )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"maxsim_topk: query set exceeds max_queries={max_queries}; "
-            "shortlist with an ANN stage first"
-        )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv")
     )

@@ -2486,7 +2486,7 @@ def llm_fingerprint_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs), the hot-bucket cap bounds any bucket's pair fan-out at
     50², and the join key is 8 chars + doc_id; text never shuffles. The
     exploded (doc_id, fp) pass is localCheckpoint-materialized once (the
-    same memoization the MinHash banded pass uses) — it feeds the bucket
+    same materialization the MinHash banded pass uses) — it feeds the bucket
     counts and BOTH self-join sides, and re-running the winnowing hash per
     consumer tripled the runtime (measured 40 s -> ~3 s at sf0.01)."""
     d = load_tables(spark, sf_dir)["documents"]

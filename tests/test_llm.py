@@ -173,19 +173,16 @@ def test_histogram_numeric_mass_conserved(spark):
     assert all(lo <= b.x <= hi for b in bins)
 
 
-def test_ngram_jaccard_default_is_band_pruned(spark):
+def test_ngram_jaccard_default_is_band_pruned(spark, full_plans):
     """The unblocked default must route through MinHash band pre-pruning
     (sub-quadratic) rather than token-count-bucket all-pairs, and still equal
     the exhaustive exact-Jaccard ground truth."""
     d = load_tables(spark, SF_CORRECT)["documents"]
     pruned = dedup.ngram_jaccard_pairs(d, threshold=0.8)
-    # checkpoint=False exposes the un-materialized plan (the production
-    # default localCheckpoints the candidate/verify frames since r13,
-    # which hides the band join behind an RDD scan); same computation.
-    bare = dedup.minhash_lsh_pairs(
-        d, num_hashes=32, bands=16, threshold=0.8,
-        materialize_bands=False, checkpoint=False,
-    )
+    # full_plans exposes the un-materialized plan (the production default
+    # localCheckpoints the candidate/verify frames since r13, which hides
+    # the band join behind an RDD scan); same computation.
+    bare = dedup.minhash_lsh_pairs(d, num_hashes=32, bands=16, threshold=0.8)
     plan = bare._jdf.queryExecution().analyzed().toString()
     assert "band_hash" in plan, "default path should join on MinHash bands"
     got = {(r.id_a, r.id_b) for r in pruned.collect()}
@@ -225,36 +222,6 @@ def test_redact_pii_no_double_count_phone_inside_email(spark):
     assert r.n_emails == 1
     assert r.n_phones == 1
     assert r.clean_text == "call <PHONE> or mail <EMAIL> now"
-
-
-def test_minhash_banded_frame_memoized_across_operators(spark):
-    """llm_minhash_dedup and ngram_jaccard's band-pruning delegate must share
-    one materialized banded frame per (session, input, params) — the Arrow
-    signature kernel is a full corpus pass at scale."""
-    d = load_tables(spark, SF_CORRECT)["documents"]
-    a = dedup._banded_memo(d, "text", "doc_id", 32, 16, 3)
-    b = dedup._banded_memo(
-        load_tables(spark, SF_CORRECT)["documents"], "text", "doc_id", 32, 16, 3
-    )
-    assert a is b  # same checkpointed frame, not a recompute
-    c = dedup._banded_memo(d, "text", "doc_id", 32, 8, 3)
-    assert c is not a  # different params -> different signature frame
-
-
-def test_banded_memo_cannot_survive_between_registry_invocations(spark):
-    """bench.py times each query best-of-N via REGISTRY[...].fn(); the banded
-    memo must be cleared at every invocation so repetitions recompute the
-    Arrow signature pass cold (VERDICT r13 What's-wrong #1 — a memo kept
-    across timed runs is a result cache). Within ONE invocation the sharing
-    stays (previous test)."""
-    from hdp2_5_hive2_spark.queries import REGISTRY
-
-    d = load_tables(spark, SF_CORRECT)["documents"]
-    a = dedup._banded_memo(d, "text", "doc_id", 32, 16, 3)
-    REGISTRY["llm_minhash_dedup"].fn(spark, SF_CORRECT)  # plan build only
-    assert dedup._BANDED_MEMO, "invocation should repopulate the memo"
-    b = dedup._banded_memo(d, "text", "doc_id", 32, 16, 3)
-    assert b is not a  # the wrapper cleared the pre-invocation entry
 
 
 # ---- curation: decontamination / connected components / sampling ----------

@@ -281,3 +281,43 @@ def test_pq_adc_topk_enforces_query_cap(spark):
     # at or under the cap the ADC path still serves
     got = pq_adc_topk(emb, emb.limit(2), k=2, n_sub=8, n_cent=4, max_queries=2)
     assert got.count() == 4
+
+
+@pytest.mark.parametrize(
+    "entry,bound",
+    [
+        ("collect_query_block", "max_queries"),
+        ("hard_negatives", "max_anchors"),
+        ("maxsim_topk", "max_queries"),
+        ("quantized_dot_topk", "max_queries"),
+    ],
+)
+def test_bounded_collect_enforces_cap_in_one_job(spark, entry, bound):
+    """Every broadcast-small collect goes through similarity.bounded_collect:
+    a block above the cap raises, naming the entry point and its bound, after
+    ONE limit(max+1) job (no separate count); a block at the cap still runs."""
+    from hdp2_5_hive2_spark.llm import similarity
+
+    fn = getattr(similarity, entry)
+
+    def run(corpus, block):
+        if entry == "collect_query_block":
+            return fn(block, **{bound: 3})
+        return fn(corpus, block, k=2, **{bound: 3})
+
+    emb = load_tables(spark, SF_CORRECT)["embeddings"]
+    sc = spark.sparkContext
+    group = f"bounded-collect-{entry}"
+    try:
+        sc.setJobGroup(group, group)
+        with pytest.raises(ValueError, match=f"{entry}: more than {bound}=3 rows"):
+            run(emb, emb)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == 1, jobs
+    # at the cap the entry point still serves every row of the block
+    out = run(emb.limit(50), emb.limit(3))
+    rows = out if isinstance(out, list) else out.collect()
+    assert len({r[0] for r in rows}) == 3

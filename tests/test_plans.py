@@ -25,19 +25,6 @@ def _run(name):
 
 
 
-import pytest
-
-
-@pytest.fixture
-def full_plans(monkeypatch):
-    """Disable reused-frame materialization (llm.text.plan_checkpoint) so a
-    structural pin can see the whole un-materialized plan; the production
-    default materializes reused frames (r13 optimization) which hides
-    their upstream behind an RDD scan. Computation is identical."""
-    from hdp2_5_hive2_spark.llm import text as _text
-    monkeypatch.setattr(_text, "_MATERIALIZE_REUSED", False)
-
-
 def test_lineage_env_knob_controls_materialization(monkeypatch, spark):
     """SPARK_GRAFT_LINEAGE=1 must turn every plan_checkpoint into a no-op at
     module init (the executor-loss escape hatch: localCheckpoint blocks have
@@ -856,7 +843,7 @@ def test_rank_calibrate_no_corpus_global_window(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_setsim_prefix_join_prunes_tokens(spark):
+def test_setsim_prefix_join_prunes_tokens(spark, full_plans):
     """The candidate join must consume PREFIX rows (filtered by position),
     not the full token table — the filter must sit below the join."""
     from pyspark.sql import functions as F
@@ -867,12 +854,12 @@ def test_setsim_prefix_join_prunes_tokens(spark):
         [(1, "a b c d"), (2, "a b c e"), (3, "x y z w")],
         "doc_id long, text string",
     )
-    # checkpoint=False: the production default materializes the prefix
-    # frame (r13 — the self-join otherwise executes the window subtree
-    # twice), which hides the filter behind an RDD scan; the structural
-    # pin inspects the un-materialized plan, same computation.
+    # full_plans: the production default materializes the prefix frame
+    # (r13 — the self-join otherwise executes the window subtree twice),
+    # which hides the filter behind an RDD scan; the structural pin
+    # inspects the un-materialized plan, same computation.
     plan = (
-        setsim_join_pairs(df, tau_num=9, tau_den=10, checkpoint=False)
+        setsim_join_pairs(df, tau_num=9, tau_den=10)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
