@@ -20,7 +20,7 @@ machinery with plain parquet + Catalyst:
 - ``acid_delete`` / ``acid_update`` write ``delete_delta_N_N`` holding
   ONLY the victim ROW__IDs (updates also write the re-inserted rows as
   a new delta — Hive's exact update-as-delete+insert rewrite).
-- ``acid_read`` is the merge-on-read: union of deltas with write_id ≤
+- ``acid_read`` is the merge-on-read: base and deltas with write_id ≤
   the snapshot bound, anti-joined against the delete-delta ROW__IDs.
   Passing ``up_to_write_id`` gives snapshot-isolation time travel —
   the reader sees exactly the committed state as of that write, the
@@ -32,9 +32,16 @@ machinery with plain parquet + Catalyst:
   base + delta + delete_delta, and (as in Hive) time travel inside a
   merged range is no longer reconstructable.
 
-Scale notes (100 TB): delete deltas hold 3 longs per victim, so the
-anti-join build side is small → broadcast (plan-pinned in tests); the
-read path scans each delta once with no shuffle beyond that join.
+Scale notes (100 TB): the merge is one parquet scan of every live
+(base/delta) directory plus one scan of every delete delta, and building
+it fires no Spark job. The live schema is the JSON that Spark writes into
+each parquet footer, read on the driver from one file per directory (the
+way Hive takes it from the metastore, not from the data); a directory
+whose columns or types differ fails loudly by name. Delete deltas hold 3
+longs per victim, so the anti-join build side is small → broadcast
+(plan-pinned in tests), and it needs no dedup: the anti-join ignores
+duplicate keys, and each delete reads the merged snapshot, so a ROW__ID
+is never deleted twice. There is no shuffle beyond that broadcast.
 Write-id allocation is a directory listing (max+1) — single-writer
 semantics, as Hive's metastore txn manager would otherwise arbitrate;
 a real deployment gates writers through a lock service exactly like
@@ -44,12 +51,15 @@ join co-location survives, mirroring the reference compactor.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 __all__ = [
     "acid_insert",
@@ -118,19 +128,76 @@ def acid_insert(df: DataFrame, path: str) -> int:
     return wid
 
 
+# Spark writes its own schema, as JSON, into every parquet footer under this
+# key; schema inference reads the same footer, but through a Spark job.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_ROWID_SCHEMA = StructType([StructField(c, LongType()) for c in _ROWID])
+
+
+def _footer_schema(spark: SparkSession, directory: str) -> StructType | None:
+    """The schema of one directory, read on the driver from the footer of
+    its first data file; None when it holds no data file. A footer that
+    Spark did not write falls back to Spark's inference (one job)."""
+    files = sorted(
+        f for f in os.listdir(directory)
+        if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(directory, f))
+    )
+    if not files:
+        return None
+    meta = pq.read_metadata(os.path.join(directory, files[0])).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(directory).schema
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+def _shape(schema: StructType) -> list[tuple[str, str]]:
+    """Column names and types, ignoring order and nullability — what a
+    by-name parquet read needs to agree on."""
+    return sorted((f.name, f.dataType.simpleString()) for f in schema)
+
+
+def _scan(spark: SparkSession, path: str, kind: str, names: list[str]) -> DataFrame:
+    """ONE parquet relation over directories of one kind, built with no job.
+    Delete deltas have the fixed ROW__ID schema; base and delta directories
+    take the first directory's footer schema, and every other directory
+    must carry the same columns and types, so the one relation cannot drop
+    or null-fill a column silently."""
+    dirs = [os.path.join(path, name) for name in names]
+    if kind == "delete_delta":
+        return spark.read.schema(_ROWID_SCHEMA).parquet(*dirs)
+    schema = None
+    for d in dirs:
+        found = _footer_schema(spark, d)
+        if found is None:
+            continue
+        if schema is None:
+            schema = found
+        elif _shape(found) != _shape(schema):
+            raise ValueError(
+                f"ACID table {path!r}: directory {os.path.basename(d)!r} has "
+                f"schema {found.simpleString()}, not the table's "
+                f"{schema.simpleString()}"
+            )
+    if schema is None:  # no data file at all: Spark's own error
+        return spark.read.parquet(*dirs)
+    nullable = StructType([StructField(f.name, f.dataType, True, f.metadata) for f in schema])
+    return spark.read.schema(nullable).parquet(*dirs)
+
+
 def _read_with_rowids(
     spark: SparkSession, path: str, up_to_write_id: int | None = None
 ) -> DataFrame:
     """The one merge-on-read implementation: base+deltas ≤ bound minus
-    delete-delta ROW__IDs (broadcast anti-join; 3 longs per victim)."""
+    delete-delta ROW__IDs — one scan per directory kind, then a broadcast
+    anti-join (3 longs per victim). Victims need no dedup: the anti-join
+    ignores duplicates on its build side, and each delete reads the merged
+    snapshot, so no ROW__ID is deleted twice."""
     bound = up_to_write_id if up_to_write_id is not None else float("inf")
     dirs = _dirs(path)
     live, dead = [], []
     for kind, _, mx, name in dirs:
-        if mx > bound:
-            continue
-        df = spark.read.parquet(os.path.join(path, name))
-        (dead if kind == "delete_delta" else live).append(df)
+        if mx <= bound:
+            (dead if kind == "delete_delta" else live).append(name)
     if not live:
         if dirs:
             raise ValueError(
@@ -139,14 +206,10 @@ def _read_with_rowids(
                 "base/delta was cleaned by compaction"
             )
         raise ValueError(f"ACID table {path!r} has no committed data")
-    rows = live[0]
-    for df in live[1:]:
-        rows = rows.unionByName(df)
+    rows = _scan(spark, path, "delta", live)
     if dead:
-        victims = dead[0].select(_ROWID)
-        for df in dead[1:]:
-            victims = victims.unionByName(df.select(_ROWID))
-        rows = rows.join(F.broadcast(victims.distinct()), _ROWID, "left_anti")
+        victims = _scan(spark, path, "delete_delta", dead)
+        rows = rows.join(F.broadcast(victims), _ROWID, "left_anti")
     return rows
 
 
@@ -174,6 +237,13 @@ def acid_update(spark: SparkSession, path: str, predicate, set_map: dict) -> int
     new versions in ``delta_N_N``."""
     wid = _next_write_id(path)
     snap = _read_with_rowids(spark, path).where(predicate)
+    # Hive's UPDATE→INSERT rewrite: each SET value is cast to its column's
+    # type, so every delta keeps the table schema; an unknown column fails
+    # here, before anything is written
+    types = {f.name: f.dataType for f in snap.schema if f.name not in _ROWID}
+    unknown = sorted(set(set_map) - set(types))
+    if unknown:
+        raise ValueError(f"ACID table {path!r}: UPDATE SET names no column {unknown}")
     # one pass is read twice (ROW__IDs + new versions); keep it cheap.
     # CORRECTNESS, not optimization — deliberately NOT plan_checkpoint /
     # SPARK_GRAFT_LINEAGE-toggleable: the second read happens AFTER the
@@ -186,7 +256,9 @@ def acid_update(spark: SparkSession, path: str, predicate, set_map: dict) -> int
     # withColumns = ONE projection: every SET expression evaluates
     # against the OLD row (SQL UPDATE's simultaneous assignment), so
     # {"a": lit(0), "b": col("a")} writes b = old a regardless of order
-    fresh = snap.drop(*_ROWID).withColumns(dict(set_map))
+    fresh = snap.drop(*_ROWID).withColumns(
+        {c: v.cast(types[c]) for c, v in set_map.items()}
+    )
     _stamp_row_ids(fresh, wid).write.mode("errorifexists").parquet(
         os.path.join(path, f"delta_{wid:07d}_{wid:07d}")
     )
@@ -220,9 +292,7 @@ def acid_compact(spark: SparkSession, path: str, major: bool = True) -> int:
             continue
         lo = min(mn for _, mn, _, _ in group)
         hi = max(mx for _, _, mx, _ in group)
-        merged = spark.read.parquet(
-            *[os.path.join(path, name) for _, _, _, name in group]
-        )
+        merged = _scan(spark, path, kind, [name for _, _, _, name in group])
         tmp = os.path.join(path, f"_compact_tmp_{kind}_{hi:07d}")
         merged.write.mode("overwrite").parquet(tmp)
         for _, _, _, name in group:

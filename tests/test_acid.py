@@ -1,12 +1,15 @@
 """Hive-ACID-shaped storage (storage/acid.py): delta/delete-delta
 directory algebra, ROW__ID identity, update-as-delete+insert, write-id
-snapshot isolation (time travel), major/minor compaction, and the
-broadcast-anti-join read plan."""
+snapshot isolation (time travel), major/minor compaction, the
+broadcast-anti-join read plan, and the one-scan merge with its schema
+guard."""
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -134,3 +137,114 @@ def test_read_plan_broadcasts_delete_deltas(spark, tmp_path):
 def test_empty_table_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="no committed data"):
         acid_read(spark, str(tmp_path / "missing"))
+
+
+def _four_dir_table(spark, root):
+    """base, delta, delete_delta, delta — one directory of every kind, and
+    two live directories after the base."""
+    _seed(spark, root)
+    acid_compact(spark, root, major=True)
+    acid_insert(spark.createDataFrame([(500, "x", 1)], "k int, s string, v int"), root)
+    acid_delete(spark, root, F.col("k") < 5)
+    acid_insert(spark.createDataFrame([(501, "y", 2)], "k int, s string, v int"), root)
+    assert [n.split("_0")[0] for n in sorted(os.listdir(root))] == [
+        "base", "delete_delta", "delta", "delta"
+    ]
+
+
+def _jobs_fired(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_builds_with_no_job_and_scans_each_kind_once(spark, tmp_path):
+    """The merge is one live scan over base+deltas and one delete-delta
+    scan; the schema comes from a footer (no inference job) and the
+    victims are not deduplicated (no aggregate, no shuffle)."""
+    root = str(tmp_path / "t")
+    _four_dir_table(spark, root)
+    df, jobs = _jobs_fired(spark, "acid-read-build", lambda: acid_read(spark, root))
+    assert jobs == 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 2, plan
+    assert "InMemoryFileIndex(3 paths)" in plan, plan
+    assert "HashAggregate" not in plan and "Exchange hashpartitioning" not in plan, plan
+    assert df.count() == 102 - 5
+
+
+@pytest.mark.parametrize("writer", ["spark", "pyarrow"])
+def test_read_rejects_delta_with_other_column_type(spark, tmp_path, writer):
+    """A foreign ``delta_N_N`` whose ``v`` is a string, not an int, fails
+    loudly by name — whether its footer carries Spark's schema or the
+    schema has to be inferred."""
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=5)
+    foreign = os.path.join(root, "delta_0000002_0000002")
+    if writer == "spark":
+        spark.createDataFrame(
+            [(9, "z", "bad", 0, 0, 2)],
+            "k int, s string, v string, _bucket long, _row_id long, _orig_write_id long",
+        ).write.parquet(foreign)
+    else:
+        os.makedirs(foreign)
+        pq.write_table(
+            pa.table({"k": pa.array([9], pa.int32()), "s": ["z"], "v": ["bad"],
+                      "_bucket": [0], "_row_id": [0], "_orig_write_id": [2]}),
+            os.path.join(foreign, "part-0.parquet"),
+        )
+    with pytest.raises(ValueError, match="delta_0000002_0000002"):
+        acid_read(spark, root)
+
+
+def test_read_infers_foreign_footer_and_skips_empty_directory(spark, tmp_path):
+    """A delta written without Spark's footer schema but with the table's
+    types is read through Spark's inference; a live directory with no data
+    file takes no part in the schema check."""
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=5)
+    foreign = os.path.join(root, "delta_0000002_0000002")
+    os.makedirs(foreign)
+    pq.write_table(
+        pa.table({"k": pa.array([9], pa.int32()), "s": ["z"], "v": pa.array([90], pa.int32()),
+                  "_bucket": [0], "_row_id": [0], "_orig_write_id": [2]}),
+        os.path.join(foreign, "part-0.parquet"),
+    )
+    empty = os.path.join(root, "delta_0000003_0000003")
+    os.makedirs(empty)
+    open(os.path.join(empty, "_SUCCESS"), "w").close()
+    cur = acid_read(spark, root)
+    assert cur.schema.simpleString() == "struct<k:int,s:string,v:int>"
+    assert sorted(r["k"] for r in cur.collect()) == [0, 1, 2, 3, 4, 9]
+
+
+def test_update_unknown_set_column_raises_before_writing(spark, tmp_path):
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=5)
+    names = sorted(os.listdir(root))
+    with pytest.raises(ValueError, match="nope"):
+        acid_update(spark, root, F.col("k") == 1, {"v": F.lit(0), "nope": F.lit(1)})
+    assert sorted(os.listdir(root)) == names
+    assert acid_write_ids(root) == [1]
+
+
+def test_update_casts_set_value_to_column_type(spark, tmp_path):
+    """SET v = a bigint on an int column writes an int (Hive's
+    UPDATE→INSERT rewrite against the table schema): the read keeps
+    ``v int``, and a minor compaction over the deltas still reads them."""
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=5)
+    acid_insert(spark.createDataFrame([(7, "x", 70)], "k int, s string, v int"), root)
+    acid_update(spark, root, F.col("k") < 2, {"v": F.lit(-1).cast("long")})
+    cur = acid_read(spark, root)
+    assert dict(cur.dtypes)["v"] == "int"
+    expect = sorted(map(tuple, cur.collect()))
+    assert [r[2] for r in expect[:2]] == [-1, -1]
+    acid_compact(spark, root, major=False)
+    assert dict(acid_read(spark, root).dtypes)["v"] == "int"
+    assert sorted(map(tuple, acid_read(spark, root).collect())) == expect

@@ -18,13 +18,6 @@ def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run(name):
-    from tests.conftest import _SPARK
-
-    return REGISTRY[name].fn(_SPARK, SF_CORRECT)
-
-
-
 def test_lineage_env_knob_controls_materialization(monkeypatch, spark):
     """SPARK_GRAFT_LINEAGE=1 must turn every plan_checkpoint into a no-op at
     module init (the executor-loss escape hatch: localCheckpoint blocks have
